@@ -27,7 +27,7 @@ from dbsync_spark.monitor.health import (
     status_endpoints,
 )
 from dbsync_spark.operators.retention import sweep
-from dbsync_spark.operators.status import status_counts
+from dbsync_spark.operators.status import current_status, status_counts
 from dbsync_spark.schemas import SYNC_DATA_SCHEMA, SYNC_STATUS_SCHEMA
 from dbsync_spark.streaming.pipeline import SyncPipeline
 
@@ -144,16 +144,34 @@ class DbSyncApp:
         except Exception:  # noqa: BLE001 - empty dir on first run
             return self.spark.createDataFrame([], SYNC_STATUS_SCHEMA)
 
+    def _status_lock(self, db: str) -> threading.Lock:
+        """The ack lock of a database's status dir, which also serializes
+        the maintenance that deletes files under a reader: status
+        compaction's swap and the retention sweep's log unlinks.
+        setdefault: a reader or compaction reaching the dir before any
+        pipeline registered it still shares THIS lock with future
+        appenders (a private fallback lock would exclude nobody)."""
+        return self._ack_locks.setdefault(
+            os.path.join(self.base_dir, "status", db), threading.Lock())
+
     def sync_state(self) -> SyncState:
-        """Global pending/blocked/error/success fold across databases (A1)."""
+        """Global pending/blocked/error/success fold across databases (A1).
+        Acks are folded to each id's CURRENT status first, so an id acked
+        ERR and later OK counts once, as a success. The log and status
+        reads run under the database's ack lock: a read lists its files
+        when planned, and a retention pass that unlinked log segments or
+        swapped the status files before the count would fail it."""
         total = SyncState()
         for db in {r.source_db for r in self.config.syncs}:
             log_path = os.path.join(self.base_dir, "log", db)
-            try:
-                log = self.spark.read.schema(SYNC_DATA_SCHEMA).parquet(log_path)
-            except Exception:  # noqa: BLE001
-                continue
-            rows = status_counts(log, self._status_df(db)).collect()
+            with self._status_lock(db):
+                try:
+                    log = self.spark.read.schema(SYNC_DATA_SCHEMA).parquet(
+                        log_path)
+                except Exception:  # noqa: BLE001
+                    continue
+                rows = status_counts(
+                    log, current_status(self._status_df(db))).collect()
             part = SyncState.from_status_counts(
                 [{"status": r["status"], "cnt": r["cnt"]} for r in rows])
             for f_ in ("pending", "blocked", "error", "success", "others"):
@@ -202,11 +220,13 @@ class DbSyncApp:
             except Exception:  # noqa: BLE001
                 continue
             if mode == "segment":
-                for f in expired_segments(log, self._status_df(db), cutoff):
-                    try:
-                        os.remove(f)
-                    except FileNotFoundError:
-                        pass  # another tick won the race; outcome identical
+                expired = expired_segments(log, self._status_df(db), cutoff)
+                with self._status_lock(db):  # no status read mid-count
+                    for f in expired:
+                        try:
+                            os.remove(f)
+                        except FileNotFoundError:
+                            pass  # another tick won the race; same outcome
             else:
                 kept = sweep(log, self._status_df(db), cutoff)
                 sweep_into_place(kept, log_path)
@@ -242,11 +262,7 @@ class DbSyncApp:
                 continue
             if n <= threshold:
                 continue
-            # setdefault: if compaction reaches this dir before any
-            # pipeline registered it, future appenders still share THIS
-            # lock (a private fallback lock would exclude nobody)
-            lock = self._ack_locks.setdefault(path, threading.Lock())
-            with lock:
+            with self._status_lock(db):
                 compact(self.spark, path, target_files=target_files,
                         schema=SYNC_STATUS_SCHEMA)
             done += 1

@@ -155,9 +155,14 @@ def delete_by_keys(schema: str, table: str, keys: list[str],
     """With `watermark_col`, the delete only applies when the stored row
     is OLDER than the delete's change id (`wm < ?` with the delete's id
     bound as the trailing parameter) — a replayed stale delete cannot
-    remove a newer row. The delete itself is physical (no tombstone):
-    safe because Structured Streaming replays batches in order, so an
-    upsert older than an applied delete is never re-delivered after it."""
+    remove a newer row. The delete itself is physical (no tombstone), so
+    the guard cannot stop an OLDER upsert that arrives after it: stream
+    replay is in order, but the retry path is not — an insert that
+    failed (ERR) in an earlier batch, followed by this key's successful
+    delete in a later batch, lands on retry and resurrects the key.
+    Blocking is per batch only; closing this needs a cross-batch
+    blocked-key map (known defect, pinned by an xfail test in
+    tests/test_jdbc_rehearsal.py)."""
     quote = "`" if dialect == "mysql" else '"'
     tgt = _qual(schema, table, quote)
     pred = " AND ".join(f"{quote}{_ident(k)}{quote} = ?" for k in keys)
@@ -372,10 +377,12 @@ class JdbcTable:
     a crash (or re-delivering any older change) can never clobber newer
     target state. This is merge_snapshot's `_last_id` contract enforced
     IN the database, where it also holds across concurrent writer
-    partitions. Deletes are physical (no tombstone): safe under
-    Structured Streaming's in-order batch replay (an upsert older than
-    an applied delete is never re-delivered after it); a full bootstrap
-    replay from id 0 also converges because it re-applies in order.
+    partitions. Deletes are physical (no tombstone). In-order batch
+    replay and a full bootstrap replay from id 0 converge, but the retry
+    path does not: a change that failed (ERR) in one batch is retried
+    after later batches applied, and per-batch blocking cannot hold back
+    a later batch's delete of the same key, so the retried upsert
+    resurrects the deleted key (known defect — see delete_by_keys).
 
     The target table must contain the payload columns plus the
     `watermark_col` (BIGINT). `n_writers` caps concurrent writer

@@ -39,16 +39,24 @@ from dbsync_spark.functions.similarity import (
     norm,
 )
 
+from dbsync_spark.streaming.state import EpochIndex, Forgettable
 
-from dbsync_spark.sources.tables import read_state
-from dbsync_spark.streaming.state import next_epoch
 
-class StreamingIvfIndex:
+class StreamingIvfIndex(EpochIndex):
+    """The inverted lists are a plain append-only union over epochs, so
+    compaction ("union") merges every epoch dir into one (query results
+    unchanged by construction — the merged state is the READ-path view,
+    so the Forgetting subclass's tombstoned vectors are physically
+    erased there)."""
+
+    SUBS = {"lists": None}
+    PRIMARY = "lists"
+    DIR_READS = True
+
     def __init__(self, spark: SparkSession, root: str, dim: int,
                  n_clusters: int = 16, id_col: str = "vec_id",
                  vec_col: str = "embedding"):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.dim = dim
         self.n_clusters = n_clusters
         self.id_col = id_col
@@ -85,26 +93,18 @@ class StreamingIvfIndex:
     def process_batch(self, vectors: DataFrame, epoch_id: int | None = None) -> None:
         """Assign a batch of (id, vector) rows to their inverted lists and
         append (epoch-scoped overwrite — replays are idempotent)."""
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "lists")
+        epoch_id = self._begin(vectors, epoch_id)
         assigned = _assign_clusters(
             vectors.select(self.id_col, self.vec_col), self.centroids(),
             self.id_col, self.vec_col, nprobe=1, keep_vec=True)
-        (assigned.select(self.id_col, "cluster", self.vec_col)
-         .write.mode("overwrite")
-         .parquet(f"{self.root}/lists/epoch={epoch_id}"))
-
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
+        self._write(assigned.select(self.id_col, "cluster", self.vec_col),
+                    "lists", epoch_id)
 
     def _lists(self) -> DataFrame | None:
-        """The stored inverted-list rows (None before the first batch).
-        The Forgetting subclass filters tombstoned vectors here, so
+        """The stored inverted-list rows (None before the first batch);
+        the Forgetting subclass's tombstoned vectors are hidden here, so
         every query path sees only surviving vectors."""
-        return read_state(self.spark, f"{self.root}/lists")
+        return self._read("lists")
 
     def query(self, queries: DataFrame, k: int = 10,
               nprobe: int = 2) -> DataFrame:
@@ -142,36 +142,8 @@ class StreamingIvfIndex:
         return (scored.withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= k))
 
-    def compact(self) -> None:
-        """OPTIMIZE-style maintenance: the inverted lists are a plain
-        append-only union over epochs, so compaction merges every epoch
-        dir into one via the shared crash-safe staged swap (query
-        results unchanged by construction — the merged state is the
-        READ-path view, so the Forgetting subclass's tombstoned vectors
-        are physically erased here). Quiescent-caller discipline as
-        everywhere: run only past the stream's checkpoint."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  list_epochs,
-                                                  pending_compaction,
-                                                  staged_compact)
 
-        if pending_compaction(self.root, "lists"):
-            finish_compact(self.root, "lists")
-        eps = list_epochs(self.root, "lists")
-        if not eps or (len(eps) <= 1 and not self._erasure_pending()):
-            return
-        lists = self._lists().select(self.id_col, "cluster", self.vec_col)
-        staged_compact(lists, self.root, "lists", eps)
-        self._mark_erased()
-
-    def _erasure_pending(self) -> bool:
-        return False
-
-    def _mark_erased(self) -> None:
-        return None
-
-
-class ForgettingIvfIndex(StreamingIvfIndex):
+class ForgettingIvfIndex(Forgettable, StreamingIvfIndex):
     """StreamingIvfIndex with right-to-be-forgotten — vector removal is
     LOCAL here (each stored row is one vector; lists are independent and
     centroids are frozen routing, never data-derived state that could
@@ -179,52 +151,9 @@ class ForgettingIvfIndex(StreamingIvfIndex):
     compact() give exact never-ingested equality: query() over the
     filtered lists is precisely the query an index never fed those
     vectors would answer. Forgotten ids are permanently retired
-    (re-ingest raises), matching the other forgetting families."""
+    (re-ingest raises), matching the other forgetting families.
+    Tombstones are keyed by the index's own id column."""
 
-    def _forgets_schema(self):
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        return StructType([StructField(self.id_col, LongType())])
-
-    def _forgotten(self) -> DataFrame:
-        return read_state(self.spark, f"{self.root}/forgets",
-                          read_schema=self._forgets_schema(),
-                          empty_schema=self._forgets_schema())
-
-    def forget(self, vec_ids: DataFrame, epoch_id: int | None = None
-               ) -> None:
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "forgets")
-        (vec_ids.select(F.col(self.id_col).cast("long")).distinct()
-         .coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.root}/forgets/epoch={epoch_id}"))
-
-    def _lists(self) -> DataFrame | None:
-        lists = super()._lists()
-        if lists is None:
-            return None
-        return lists.join(self._forgotten(), on=self.id_col, how="anti")
-
-    def process_batch(self, vectors: DataFrame,
-                      epoch_id: int | None = None) -> None:
-        clash = (vectors.select(self.id_col)
-                 .join(self._forgotten(), on=self.id_col, how="semi"))
-        if not clash.isEmpty():
-            ids = [r[0] for r in clash.limit(5).collect()]
-            raise ValueError(
-                f"vec_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under new ids")
-        return super().process_batch(vectors, epoch_id)
-
-    def _erasure_pending(self) -> bool:
-        from dbsync_spark.streaming.state import erasure_pending
-
-        n = self._forgotten().count()
-        return bool(n) and erasure_pending(self.root, "lists", n)
-
-    def _mark_erased(self) -> None:
-        from dbsync_spark.streaming.state import record_erasure
-
-        n = self._forgotten().count()
-        if n:
-            record_erasure(self.root, "lists", n)
+    @property
+    def tombstone_col(self) -> str:
+        return self.id_col

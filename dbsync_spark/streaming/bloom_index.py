@@ -47,54 +47,71 @@ from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from dbsync_spark.functions.sketch import (_build_bloom, bloom_flag_clean,
                                            shingle_hash_rows)
-from dbsync_spark.sources.tables import read_state
-from dbsync_spark.streaming.state import next_epoch
+from dbsync_spark.streaming.state import EpochIndex, Forgettable
 
 _SHASH_SCHEMA = StructType([StructField("shash", LongType())])
 _BITMAP_SCHEMA = StructType([StructField("bm", BinaryType())])
+_DOCHASH_SCHEMA = StructType([StructField("doc_id", LongType()),
+                              StructField("shash", LongType())])
 
 
-class StreamingBloomIndex:
+class StreamingBloomIndex(EpochIndex):
     """Incremental held-out-set index over parquet state dirs. Call
     `process_batch` with each batch of test/eval documents (directly or
-    via `foreach_batch_handler()`), then `flag` training corpora."""
+    via `foreach_batch_handler()`), then `flag` training corpora.
+
+    Compaction ("union"; flag() lists and unions EVERY epoch per call,
+    so this index needs it most) merges the covered shash epochs into one (their
+    union IS the exact set) and the bitmap epochs into one OR-of-all row.
+    Order matters for the false-clean guarantee: shash compacts FIRST.
+    With shash=[max] and bitmaps still per-epoch, covered = [max] and
+    that one epoch holds the FULL union — sound. The reverse order would
+    leave a window where only the newest delta is in the exact set while
+    every bit is in the bitmap: a doc matching an older epoch's shingle
+    would Bloom-flag but exact-verify clean. A crashed (uncovered) shash
+    epoch is left in place, still excluded by flag() until its bitmap
+    lands."""
+
+    SUBS = {"shash": _SHASH_SCHEMA, "bitmap": _BITMAP_SCHEMA}
+    PRIMARY = "shash"
 
     def __init__(self, spark: SparkSession, root: str, k: int = 3,
                  bloom_bits: int = 1 << 20, text_col: str = "text",
                  id_col: str = "doc_id"):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.k = k
         self.m = bloom_bits
         self.text_col = text_col
         self.id_col = id_col
 
-    def _epochs(self, sub: str) -> list[int]:
-        from dbsync_spark.streaming.state import list_epochs
-
-        return list_epochs(self.root, sub)
-
     def _hashes_through(self, epochs: list[int]) -> DataFrame:
-        if not epochs:
-            return self.spark.createDataFrame([], _SHASH_SCHEMA)
-        paths = [f"{self.root}/shash/epoch={e}" for e in epochs]
-        return self.spark.read.schema(_SHASH_SCHEMA).parquet(*paths)
+        return self._read("shash", epochs=epochs)
 
     def _bitmap(self, epoch: int | None) -> bytes:
-        if epoch is None:
-            return bytes(self.m // 8)
-        row = read_state(self.spark, f"{self.root}/bitmap/epoch={epoch}",
-                         read_schema=_BITMAP_SCHEMA,
-                         empty_schema=_BITMAP_SCHEMA).first()
+        row = None if epoch is None else self._read_epoch(
+            "bitmap", epoch).first()
         return bytes(row["bm"]) if row is not None else bytes(self.m // 8)
+
+    def _covered(self) -> list[int]:
+        """shash epochs whose bitmap write also landed."""
+        bm = set(self._epochs("bitmap"))
+        return [e for e in self._epochs("shash") if e in bm]
+
+    def _merged_bitmap(self) -> bytes:
+        """OR of every persisted bitmap epoch."""
+        import numpy as np
+
+        acc = np.frombuffer(bytes(self.m // 8), dtype=np.uint8).copy()
+        for e in self._epochs("bitmap"):
+            acc |= np.frombuffer(self._bitmap(e), dtype=np.uint8)
+        return bytes(acc)
 
     def process_batch(self, test_docs: DataFrame,
                       epoch_id: int | None = None) -> None:
         """Fold one micro-batch of held-out documents into the index."""
         import numpy as np
 
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "shash")
+        epoch_id = self._begin(test_docs, epoch_id)
         # Anti-join only against COVERED earlier epochs (shash epochs whose
         # bitmap write also landed). A crashed epoch (shash persisted,
         # bitmap not) is excluded by flag()'s soundness guard — if its
@@ -104,9 +121,7 @@ class StreamingBloomIndex:
         # false-clean window. Re-listing the hash in the later delta is
         # harmless (flag's verify is a semi-join; the bitmap OR is
         # idempotent).
-        bm = set(self._epochs("bitmap"))
-        before = [e for e in self._epochs("shash")
-                  if e < epoch_id and e in bm]
+        before = [e for e in self._covered() if e < epoch_id]
 
         sh = shingle_hash_rows(test_docs, text_col=self.text_col,
                                id_col=self.id_col, k=self.k
@@ -115,66 +130,31 @@ class StreamingBloomIndex:
                         how="anti")
         # a batch's novel-hash delta is small relative to the corpus —
         # one file per epoch keeps the union read O(n_epochs) files
-        delta.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.root}/shash/epoch={epoch_id}")
+        self._write(delta.coalesce(1), "shash", epoch_id)
 
-        prev_eps = [e for e in self._epochs("bitmap") if e < epoch_id]
         prev = np.frombuffer(
-            self._bitmap(prev_eps[-1] if prev_eps else None),
+            self._bitmap(self._latest("bitmap", before=epoch_id)),
             dtype=np.uint8)
         batch_bm = np.frombuffer(
-            _build_bloom(self.spark.read.schema(_SHASH_SCHEMA).parquet(
-                f"{self.root}/shash/epoch={epoch_id}"), self.m),
+            _build_bloom(self._hashes_through([epoch_id]), self.m),
             dtype=np.uint8)
-        merged = bytes(prev | batch_bm)
-        self.spark.createDataFrame([(bytearray(merged),)], _BITMAP_SCHEMA
-                                   ).coalesce(1).write.mode("overwrite"
-                                   ).parquet(
-            f"{self.root}/bitmap/epoch={epoch_id}")
+        self._write_bitmap(bytes(prev | batch_bm), epoch_id)
 
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
+    def _write_bitmap(self, bm: bytes, epoch_id: int) -> None:
+        self._write(self.spark.createDataFrame(
+            [(bytearray(bm),)], _BITMAP_SCHEMA).coalesce(1),
+            "bitmap", epoch_id)
 
-        return handle
+    def _compaction_epochs(self, sub: str) -> list[int]:
+        return self._covered() if sub == "shash" else self._epochs(sub)
 
-    def compact(self) -> None:
-        """OPTIMIZE-style maintenance (judge r5 item #6 — this index
-        especially: flag() lists and unions EVERY epoch per call). Merges
-        the covered shash epochs into one epoch dir (their union IS the
-        exact set) and the bitmap epochs into one OR-of-all row, via the
-        shared crash-safe staged swap.
-
-        Order matters for the false-clean guarantee: shash compacts
-        FIRST. With shash=[max] and bitmaps still per-epoch, covered =
-        [max] and that one epoch holds the FULL union — sound. The
-        reverse order would leave a window where only the newest delta
-        is in the exact set while every bit is in the bitmap: a doc
-        matching an older epoch's shingle would Bloom-flag but exact-
-        verify clean — exactly the false-clean hole the covered-epoch
-        anti-join closed. A crashed (uncovered) shash epoch is left in
-        place, still excluded by flag() until its bitmap lands."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  pending_compaction,
-                                                  staged_compact)
-
-        for sub in ("shash", "bitmap"):
-            if pending_compaction(self.root, sub):
-                finish_compact(self.root, sub)
-        bm_eps = self._epochs("bitmap")
-        covered = [e for e in self._epochs("shash") if e in set(bm_eps)]
-        if len(covered) > 1:
-            staged_compact(self._hashes_through(covered).distinct(),
-                           self.root, "shash", covered)
-        if len(bm_eps) > 1:
-            import numpy as np
-
-            acc = np.frombuffer(bytes(self.m // 8), dtype=np.uint8).copy()
-            for e in bm_eps:
-                acc |= np.frombuffer(self._bitmap(e), dtype=np.uint8)
-            merged = self.spark.createDataFrame(
-                [(bytearray(bytes(acc)),)], _BITMAP_SCHEMA)
-            staged_compact(merged, self.root, "bitmap", bm_eps)
+    def _compaction_view(self, sub: str, eps: list[int]) -> DataFrame:
+        if sub == "shash":
+            return self._hashes_through(eps).distinct()
+        if sub == "bitmap":
+            return self.spark.createDataFrame(
+                [(bytearray(self._merged_bitmap()),)], _BITMAP_SCHEMA)
+        return super()._compaction_view(sub, eps)
 
     def flag(self, train_df: DataFrame) -> DataFrame:
         """(id, n_shingles) for train docs sharing NO shingle with the
@@ -190,26 +170,14 @@ class StreamingBloomIndex:
         excluded until replay) or epochs were processed out of order
         (a later-written earlier epoch's bits OR in regardless of which
         epoch is 'latest')."""
-        import numpy as np
-
-        bm_eps = self._epochs("bitmap")
-        covered = [e for e in self._epochs("shash") if e in set(bm_eps)]
-        test_hashes = self._hashes_through(covered)
-        acc = np.frombuffer(bytes(self.m // 8), dtype=np.uint8).copy()
-        for e in bm_eps:
-            acc |= np.frombuffer(self._bitmap(e), dtype=np.uint8)
+        test_hashes = self._hashes_through(self._covered())
         train_sh = shingle_hash_rows(train_df, text_col=self.text_col,
                                      id_col=self.id_col, k=self.k)
-        return bloom_flag_clean(train_sh, test_hashes, bytes(acc), self.m,
-                                id_col=self.id_col)
+        return bloom_flag_clean(train_sh, test_hashes, self._merged_bitmap(),
+                                self.m, id_col=self.id_col)
 
 
-_FORGETS_SCHEMA = StructType([StructField("doc_id", LongType())])
-_DOCHASH_SCHEMA = StructType([StructField("doc_id", LongType()),
-                              StructField("shash", LongType())])
-
-
-class ForgettingBloomIndex(StreamingBloomIndex):
+class ForgettingBloomIndex(Forgettable, StreamingBloomIndex):
     """StreamingBloomIndex with eval-document removal (completing the
     right-to-be-forgotten story across all three persisted index
     families — search, dedup, decontamination).
@@ -226,6 +194,13 @@ class ForgettingBloomIndex(StreamingBloomIndex):
     Unlike the tombstone indexes this is a physical rewrite, which also
     satisfies storage-level erasure for the forgotten docs' hashes.
 
+    Compaction additionally merges dochash to the union of SURVIVING
+    (doc_id, shash) rows — the physical-erasure counterpart for the
+    attribution store — and forgets to one distinct tombstone epoch. A
+    post-compaction forget() then rebuilds from the single dochash
+    epoch, overwriting the single shash/bitmap epoch: the same fixed
+    point as rebuild-then-compact.
+
     Storage additions:
     - <root>/dochash/epoch=N : (doc_id, shash) attribution for epoch N
     - <root>/forgets/epoch=N : (doc_id) tombstones
@@ -234,81 +209,23 @@ class ForgettingBloomIndex(StreamingBloomIndex):
     forgetting indexes): re-ingest raises. Replaying `forget` rewrites
     identical tombstones and re-runs the deterministic rebuild."""
 
-    def _forgotten(self) -> DataFrame:
-        eps = self._epochs("forgets")
-        if not eps:
-            return self.spark.createDataFrame([], _FORGETS_SCHEMA)
-        paths = [f"{self.root}/forgets/epoch={e}" for e in eps]
-        return self.spark.read.schema(_FORGETS_SCHEMA).parquet(*paths)
+    SUBS = {**StreamingBloomIndex.SUBS, "dochash": _DOCHASH_SCHEMA,
+            "forgets": None}
+    ERASURE_SUB = "dochash"
 
-    def process_batch(self, test_docs: DataFrame,
-                      epoch_id: int | None = None) -> None:
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "shash")
-        clash = (test_docs
-                 .select(F.col(self.id_col).cast("long").alias("doc_id"))
-                 .join(self._forgotten(), on="doc_id", how="semi")
-                 .limit(5).collect())
-        if clash:
-            ids = sorted(r["doc_id"] for r in clash)
-            raise ValueError(
-                f"doc_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under a fresh doc_id")
-        (shingle_hash_rows(test_docs, text_col=self.text_col,
-                           id_col=self.id_col, k=self.k)
-         .select(F.col(self.id_col).cast("long").alias("doc_id"), "shash")
-         .coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.root}/dochash/epoch={epoch_id}"))
-        super().process_batch(test_docs, epoch_id)
-
-    def compact(self) -> None:
-        """Base compaction plus the attribution/tombstone subs: dochash
-        compacts to the union of SURVIVING (doc_id, shash) rows — the
-        physical-erasure counterpart for the attribution store, which
-        forget()'s rebuild erases from shash/bitmap but previously left
-        in the per-epoch dochash files — and forgets to one distinct
-        tombstone epoch. A post-compaction forget() then rebuilds from
-        the single dochash epoch, overwriting the single shash/bitmap
-        epoch: the same fixed point as rebuild-then-compact."""
-        from dbsync_spark.streaming.state import (erasure_pending,
-                                                  finish_compact,
-                                                  pending_compaction,
-                                                  record_erasure,
-                                                  staged_compact)
-
-        super().compact()
-        for sub in ("dochash", "forgets"):
-            if pending_compaction(self.root, sub):
-                finish_compact(self.root, sub)
-        dh_eps = self._epochs("dochash")
-        # skip the staged rewrite when the single compacted epoch is
-        # already forget-clean (r6 ADVICE: `forgets not empty` is
-        # permanently true after the first forget — the _erased marker
-        # records which tombstone set was applied)
-        n_forg = self._forgotten().distinct().count()
-        if dh_eps and (len(dh_eps) > 1
-                       or (n_forg and erasure_pending(
-                           self.root, "dochash", n_forg))):
-            paths = [f"{self.root}/dochash/epoch={e}" for e in dh_eps]
-            survivors = (self.spark.read.schema(_DOCHASH_SCHEMA)
-                         .parquet(*paths)
-                         .join(self._forgotten(), on="doc_id", how="anti"))
-            staged_compact(survivors, self.root, "dochash", dh_eps)
-            record_erasure(self.root, "dochash", n_forg)
-        fg_eps = self._epochs("forgets")
-        if len(fg_eps) > 1:
-            staged_compact(self._forgotten().distinct(),
-                           self.root, "forgets", fg_eps)
+    def _begin(self, test_docs: DataFrame, epoch_id: int | None) -> int:
+        epoch_id = super()._begin(test_docs, epoch_id)
+        self._write(shingle_hash_rows(test_docs, text_col=self.text_col,
+                                      id_col=self.id_col, k=self.k)
+                    .select(F.col(self.id_col).cast("long").alias("doc_id"),
+                            "shash").coalesce(1), "dochash", epoch_id)
+        return epoch_id
 
     def forget(self, doc_ids: DataFrame, epoch_id: int | None = None
                ) -> None:
         """Tombstone a frame of (doc_id) rows, then physically rebuild
         every shash epoch and bitmap from the surviving attribution."""
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "forgets")
-        (doc_ids.select(F.col(self.id_col).cast("long").alias("doc_id"))
-         .distinct().coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.root}/forgets/epoch={epoch_id}"))
+        super().forget(doc_ids, epoch_id)
         self._rebuild()
 
     def _rebuild(self) -> None:
@@ -321,26 +238,17 @@ class ForgettingBloomIndex(StreamingBloomIndex):
         process_batch, run E times."""
         import numpy as np
 
-        gone = self._forgotten()
         acc = np.frombuffer(bytes(self.m // 8), dtype=np.uint8).copy()
-        rebuilt: list[str] = []
+        rebuilt: list[int] = []
         for e in self._epochs("dochash"):
-            dh = self.spark.read.schema(_DOCHASH_SCHEMA).parquet(
-                f"{self.root}/dochash/epoch={e}")
-            delta = (dh.join(gone, on="doc_id", how="anti")
-                     .select("shash").distinct())
+            delta = self._read("dochash", epochs=[e]).select(
+                "shash").distinct()
             if rebuilt:
-                prior = self.spark.read.schema(_SHASH_SCHEMA).parquet(
-                    *rebuilt)
-                delta = delta.join(prior, on="shash", how="anti")
-            delta.coalesce(1).write.mode("overwrite").parquet(
-                f"{self.root}/shash/epoch={e}")
-            rebuilt.append(f"{self.root}/shash/epoch={e}")
+                delta = delta.join(self._hashes_through(rebuilt),
+                                   on="shash", how="anti")
+            self._write(delta.coalesce(1), "shash", e)
+            rebuilt.append(e)
             acc |= np.frombuffer(
-                _build_bloom(self.spark.read.schema(_SHASH_SCHEMA)
-                             .parquet(rebuilt[-1]), self.m),
+                _build_bloom(self._hashes_through([e]), self.m),
                 dtype=np.uint8)
-            (self.spark.createDataFrame([(bytearray(bytes(acc)),)],
-                                        _BITMAP_SCHEMA)
-             .coalesce(1).write.mode("overwrite")
-             .parquet(f"{self.root}/bitmap/epoch={e}"))
+            self._write_bitmap(bytes(acc), e)

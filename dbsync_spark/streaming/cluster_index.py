@@ -50,10 +50,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from dbsync_spark.functions.dedup import dedup_clusters_incremental
-from dbsync_spark.sources.tables import read_state
 from dbsync_spark.streaming.dedup_index import StreamingDedupIndex
-from dbsync_spark.streaming.state import (list_epochs, next_epoch,
-                                          write_parts)
+from dbsync_spark.streaming.state import EpochIndex, write_parts
 
 _LABELS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -61,15 +59,22 @@ _LABELS_SCHEMA = StructType([
 ])
 
 
-class StreamingClusterIndex:
+class StreamingClusterIndex(EpochIndex):
     """Incremental (doc_id, canonical_id) maintenance over parquet
     state. Call `process_batch` per (doc_id, text) micro-batch (directly
-    or via `foreach_batch_handler()`), read `canonical()` any time."""
+    or via `foreach_batch_handler()`), read `canonical()` any time.
+    compact() collapses the label delta epochs into ONE full-table epoch
+    at the max covered id (latest-per-doc resolves identically when
+    every doc has exactly one row); the wrapped pair index compacts its
+    own subs."""
+
+    SUBS = {"labels": _LABELS_SCHEMA}
+    PRIMARY = "labels"
+    DIR_READS = True
 
     def __init__(self, spark: SparkSession, root: str, k: int = 3,
                  threshold: float = 0.5, max_iters: int = 20):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.max_iters = max_iters
         self.dedup = StreamingDedupIndex(spark, f"{self.root}/dedup",
                                          k=k, threshold=threshold)
@@ -77,8 +82,8 @@ class StreamingClusterIndex:
     def _label_rows(self) -> DataFrame:
         """Raw delta rows with their partition-discovered epoch column
         (empty, correctly typed, before the first batch)."""
-        df = read_state(self.spark, f"{self.root}/labels")
-        if df is None or "epoch" not in df.columns:
+        df = self._read("labels")
+        if "epoch" not in df.columns:
             return self.spark.createDataFrame(
                 [], StructType(list(_LABELS_SCHEMA.fields)
                                + [StructField("epoch", LongType())]))
@@ -103,8 +108,7 @@ class StreamingClusterIndex:
         graph into the prior labels by seeded propagation, and persist
         only the CHANGED (doc_id, canonical_id) rows as this epoch's
         delta. Returns the full current labels."""
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "labels")
+        epoch_id = self._begin(new_docs, epoch_id)
         self.dedup.process_batch(new_docs, epoch_id)
         prior = self._labels_asof(epoch_id).localCheckpoint(eager=False)
         ids = (prior.select("doc_id")
@@ -116,15 +120,9 @@ class StreamingClusterIndex:
                  .where(F.col("_prior_cid").isNull()
                         | (F.col("canonical_id") != F.col("_prior_cid")))
                  .select("doc_id", "canonical_id"))
-        (delta.coalesce(write_parts(self.spark)).write.mode("overwrite")
-         .parquet(f"{self.root}/labels/epoch={epoch_id}"))
+        self._write(delta.coalesce(write_parts(self.spark)), "labels",
+                    epoch_id)
         return self.canonical()
-
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
 
     def canonical(self) -> DataFrame:
         """The current (doc_id, canonical_id) table — latest epoch wins
@@ -137,22 +135,11 @@ class StreamingClusterIndex:
                 .where(F.col("doc_id") == F.col("canonical_id"))
                 .select("doc_id"))
 
-    def compact(self) -> None:
-        """Collapse the label delta epochs into ONE full-table epoch at
-        the max covered id (latest-per-doc resolves identically when
-        every doc has exactly one row) via the shared crash-safe staged
-        swap; the wrapped pair index uses its own staged compaction.
-        Quiescent-caller discipline as everywhere."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  pending_compaction,
-                                                  staged_compact)
+    def _compaction_view(self, sub: str, eps: list[int]) -> DataFrame:
+        return self._labels_asof(None)
 
-        if pending_compaction(self.root, "labels"):
-            finish_compact(self.root, "labels")
-        eps = list_epochs(self.root, "labels")
-        if len(eps) > 1:
-            staged_compact(self._labels_asof(None), self.root, "labels",
-                           eps)
+    def compact(self) -> None:
+        super().compact()
         self.dedup.compact()
 
 
@@ -210,7 +197,6 @@ class ForgettingClusterIndex(StreamingClusterIndex):
         epoch — see class docstring). Replaying a forget converges to
         the same state."""
         from dbsync_spark.functions.dedup import dedup_clusters
-        from dbsync_spark.streaming.dedup_index import _DOCS_SCHEMA
         from dbsync_spark.streaming.state import (finish_compact,
                                                   pending_compaction,
                                                   staged_compact)
@@ -218,13 +204,12 @@ class ForgettingClusterIndex(StreamingClusterIndex):
         if pending_compaction(self.root, "labels"):
             finish_compact(self.root, "labels")
         self.dedup.forget(doc_ids)
-        eps = list_epochs(self.root, "labels")
+        eps = self._epochs("labels")
         if not eps:
             return
         # survivors via the index's own tombstone-filtered reader — a raw
         # dir read would resurrect the forgotten ids
-        ids = self.dedup._read("docs", _DOCS_SCHEMA).select(
-            "doc_id").distinct()
+        ids = self.dedup._read("docs").select("doc_id").distinct()
         labels = dedup_clusters(ids, self.dedup.all_pairs(),
                                 max_iters=self.max_iters)
         staged_compact(labels, self.root, "labels", eps)

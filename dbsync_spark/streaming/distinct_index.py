@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType, TimestampType
 
-from dbsync_spark.sources.tables import read_state
+from dbsync_spark.streaming.state import EpochIndex
 
 _STATE_SCHEMA = StructType([
     StructField("bucket", TimestampType()),
@@ -41,49 +41,31 @@ _STATE_SCHEMA = StructType([
 ])
 
 
-class StreamingDistinctIndex:
+class StreamingDistinctIndex(EpochIndex):
     """Continuous per-day distinct counting over parquet sketch state.
     Call `process_batch` per micro-batch (directly or via
-    `foreach_batch_handler()`)."""
+    `foreach_batch_handler()`). Cumulative latest-epoch-wins state:
+    compact() keeps only the newest epoch."""
+
+    SUBS = {"sketches": _STATE_SCHEMA}
+    PRIMARY = "sketches"
+    COMPACTION = "cumulative"
 
     def __init__(self, spark: SparkSession, root: str, lg_k: int = 12,
                  ts_col: str = "ts", key_col: str = "user_id",
                  bucket: str = "day"):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.lg_k = lg_k
         self.ts_col = ts_col
         self.key_col = key_col
         self.bucket = bucket
 
-    def _epochs(self) -> list[int]:
-        import os
-        import re
-
-        try:
-            entries = os.listdir(f"{self.root}/sketches")
-        except FileNotFoundError:
-            return []
-        return sorted(int(m.group(1)) for e in entries
-                      if (m := re.fullmatch(r"epoch=(\d+)", e)))
-
-    def _state(self, epoch: int | None) -> DataFrame:
-        if epoch is None:
-            return self.spark.createDataFrame([], _STATE_SCHEMA)
-        return read_state(self.spark, f"{self.root}/sketches/epoch={epoch}",
-                          read_schema=_STATE_SCHEMA,
-                          empty_schema=_STATE_SCHEMA)
-
     def process_batch(self, batch: DataFrame,
                       epoch_id: int | None = None) -> None:
         """Sketch one micro-batch and union it into the per-bucket
         state."""
-        from dbsync_spark.streaming.state import next_epoch
-
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "sketches")
-        before = [e for e in self._epochs() if e < epoch_id]
-        prev = self._state(before[-1] if before else None)
+        epoch_id = self._begin(batch, epoch_id)
+        prev = self._read_epoch("sketches", self._latest(before=epoch_id))
 
         bsk = (batch.select(
             F.date_trunc(self.bucket, F.col(self.ts_col)).alias("bucket"),
@@ -98,29 +80,12 @@ class StreamingDistinctIndex:
                 .when(F.col("_bsk").isNull(), F.col("sketch"))
                 .otherwise(F.hll_union("sketch", "_bsk")).alias("sketch"))
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.root}/sketches/epoch={epoch_id}")
-
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
-
-    def compact(self) -> int:
-        """OPTIMIZE-style maintenance (judge r5 item #6): sketch state is
-        cumulative latest-epoch-wins, so compaction deletes every older
-        epoch dir — crash-safe with no staging (reads take the newest
-        epoch at every intermediate point)."""
-        from dbsync_spark.streaming.state import prune_epochs
-
-        return prune_epochs(self.root, "sketches")
+        self._write(merged.coalesce(1), "sketches", epoch_id)
 
     def estimates(self) -> DataFrame:
         """(bucket, n_distinct) estimated from the latest sketch state —
         empty frame before the first batch."""
-        eps = self._epochs()
-        state = self._state(eps[-1] if eps else None)
+        state = self._read_epoch("sketches", self._latest())
         return state.select(
             "bucket",
             F.hll_sketch_estimate("sketch").alias("n_distinct"))

@@ -35,16 +35,24 @@ from pyspark.sql import functions as F
 from dbsync_spark.functions.timeseries import dtw_to_query, series_arrays
 
 
-from dbsync_spark.sources.tables import read_state
-from dbsync_spark.streaming.state import next_epoch
+from dbsync_spark.streaming.state import EpochIndex
 
-class StreamingDtwMonitor:
+
+class StreamingDtwMonitor(EpochIndex):
+    """Per-key bucket store (additive: re-summed per (id, bucket) over
+    epochs) plus per-epoch distances (latest epoch wins per key). Both
+    compact as unions: buckets fold to one epoch of raw rows, distances
+    to each key's latest score published at the max covered epoch."""
+
+    SUBS = {"buckets": None, "dists": None}
+    PRIMARY = "buckets"
+    DIR_READS = True
+
     def __init__(self, spark: SparkSession, root: str, query_values,
                  id_col: str = "user_id", ts_col: str = "ts",
                  val_col=None, radius: int = 24,
                  window_buckets: int = 168, bucket: str = "hour"):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.query_values = [float(v) for v in query_values]
         self.id_col = id_col
         self.ts_col = ts_col
@@ -57,30 +65,24 @@ class StreamingDtwMonitor:
     def _bucket(self, col) -> F.Column:
         return F.date_trunc(self.bucket, col)
 
-    def _read_buckets(self) -> DataFrame | None:
-        return read_state(self.spark, f"{self.root}/buckets")
-
     def process_batch(self, batch_df: DataFrame, epoch_id: int | None = None
                       ) -> DataFrame:
         """Ingest one micro-batch; returns (id, dtw_dist) for the keys
         the batch touched."""
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "buckets")
+        epoch_id = self._begin(batch_df, epoch_id)
         per_bucket = (batch_df
                       .groupBy(F.col(self.id_col).alias("_id"),
                                self._bucket(F.col(self.ts_col)).alias("_b"))
                       .agg(F.sum(self.val_col).alias("_v")))
-        (per_bucket.write.mode("overwrite")
-         .parquet(f"{self.root}/buckets/epoch={epoch_id}"))
+        self._write(per_bucket, "buckets", epoch_id)
 
         touched = per_bucket.select("_id").distinct()
         dists = self._score(touched)
-        (dists.write.mode("overwrite")
-         .parquet(f"{self.root}/dists/epoch={epoch_id}"))
+        self._write(dists, "dists", epoch_id)
         return dists
 
     def _score(self, keys: DataFrame) -> DataFrame:
-        state = self._read_buckets()
+        state = self._read("buckets")
         # one epoch partition per batch; re-sum across epochs per (id, b)
         mine = (state.join(keys, on="_id", how="left_semi")
                 .groupBy("_id", "_b").agg(F.sum("_v").alias("_v")))
@@ -109,16 +111,17 @@ class StreamingDtwMonitor:
         return dtw_to_query(series, np.asarray(self.query_values),
                             self.id_col, radius=self.radius)
 
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
+    def _compaction_view(self, sub: str, eps: list[int]) -> DataFrame:
+        if sub == "dists":
+            return self.distances()
+        return self._read("buckets", epochs=eps)
 
     def distances(self) -> DataFrame:
         """Latest DTW distance per key across all processed batches."""
         from pyspark.sql.types import (DoubleType, LongType,
                                        StructField, StructType)
+
+        from dbsync_spark.sources.tables import read_state
 
         d = read_state(self.spark, f"{self.root}/dists",
                        empty_schema=StructType([

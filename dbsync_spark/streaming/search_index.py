@@ -35,7 +35,7 @@ from pyspark.sql.types import (IntegerType, LongType, StringType,
 
 from dbsync_spark.functions.text import (bm25_score_pairs,
                                          build_posting_index, tokens)
-from dbsync_spark.streaming.state import next_epoch
+from dbsync_spark.streaming.state import EpochIndex, Forgettable
 
 _POSTINGS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -48,103 +48,43 @@ _DOCSTATS_SCHEMA = StructType([
 ])
 
 
-class StreamingSearchIndex:
+class StreamingSearchIndex(EpochIndex):
     """Incremental inverted index over parquet state dirs. Call
     `process_batch` per micro-batch of (doc_id, text) documents
     (directly or via `foreach_batch_handler()`); query with `bm25`
-    and `phrase`. Batch doc_ids must be globally unique."""
+    and `phrase`. Batch doc_ids must be globally unique. Postings and
+    doc stats are set unions over epochs ("union" compaction)."""
+
+    SUBS = {"postings": _POSTINGS_SCHEMA, "docstats": _DOCSTATS_SCHEMA}
+    PRIMARY = "postings"
 
     def __init__(self, spark: SparkSession, root: str,
                  text_col: str = "text", id_col: str = "doc_id"):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.text_col = text_col
         self.id_col = id_col
-
-    def _epochs(self, sub: str) -> list[int]:
-        from dbsync_spark.streaming.state import list_epochs
-
-        return list_epochs(self.root, sub)
-
-    def _read(self, sub: str, schema: StructType) -> DataFrame:
-        eps = self._epochs(sub)
-        if not eps:
-            return self.spark.createDataFrame([], schema)
-        paths = [f"{self.root}/{sub}/epoch={e}" for e in eps]
-        return self.spark.read.schema(schema).parquet(*paths)
 
     def process_batch(self, new_docs: DataFrame,
                       epoch_id: int | None = None) -> None:
         """Index one micro-batch: append its postings and doc stats.
         Epoch-scoped overwrite — replaying a failed epoch rewrites
         exactly its own files."""
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "postings")
+        epoch_id = self._begin(new_docs, epoch_id)
         posts = build_posting_index(new_docs, text_col=self.text_col,
                                     id_col=self.id_col)
         # state is always stored under 'doc_id' regardless of the
         # caller's id_col: the read schemas are fixed, so an unaliased
         # custom column name would read back as all-NULL doc_ids
-        posts.select(F.col(self.id_col).cast("long").alias("doc_id"),
-                     F.col("pos").cast("int"), "term"
-                     ).write.mode("overwrite").parquet(
-            f"{self.root}/postings/epoch={epoch_id}")
+        self._write(posts.select(
+            F.col(self.id_col).cast("long").alias("doc_id"),
+            F.col("pos").cast("int"), "term"), "postings", epoch_id)
         stats = new_docs.select(
             F.col(self.id_col).cast("long").alias("doc_id"),
             F.size(tokens(F.col(self.text_col))).cast("long").alias("dl"))
-        stats.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.root}/docstats/epoch={epoch_id}")
-
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
-
-    def compact(self) -> None:
-        """OPTIMIZE-style maintenance: merge every epoch's postings/doc
-        stats into ONE epoch directory (keeping the max epoch id so
-        next_epoch keeps advancing) and physically drop rows the read
-        path already hides (the Forgetting subclass's tombstoned docs —
-        this is the storage-level-erasure counterpart of its read-time
-        anti-join). Query results are unchanged by construction: the
-        state is a set union over epochs and compaction only
-        re-associates it (pinned in tests + tools/search_soak.py).
-
-        Crash-safe in the BucketedTable staging style: the merged copy
-        lands in a `_compacting` staging dir (underscore-hidden from
-        Spark and from list_epochs) with a `_covers.json` manifest, the
-        covered epoch dirs are deleted, then one atomic rename publishes
-        the staging dir as the surviving epoch. A crash before the
-        manifest leaves the old state untouched; a crash after it leaves
-        a window where reads are partial — re-running compact() first
-        completes the interrupted swap from the staged full copy, so no
-        data is ever lost. File count: O(n_epochs) -> O(1) per sub."""
-        for sub in ("postings", "docstats"):
-            self._compact_sub(sub)
-
-    def _compact_sub(self, sub: str) -> None:
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  pending_compaction,
-                                                  staged_compact)
-
-        schema = _POSTINGS_SCHEMA if sub == "postings" else _DOCSTATS_SCHEMA
-        if pending_compaction(self.root, sub):
-            finish_compact(self.root, sub)
-        eps = self._epochs(sub)
-        if not eps or (len(eps) <= 1 and not self._has_hidden_rows(sub)):
-            return
-        # Forgetting subclass: tombstoned rows filtered here
-        staged_compact(self._read(sub, schema), self.root, sub, eps)
-
-    def _has_hidden_rows(self, sub: str) -> bool:
-        """Whether compaction would change the stored bytes even with a
-        single epoch (rows hidden at read time — overridden by the
-        Forgetting subclass)."""
-        return False
+        self._write(stats.coalesce(1), "docstats", epoch_id)
 
     def postings(self, terms: list[str] | None = None) -> DataFrame:
-        posts = self._read("postings", _POSTINGS_SCHEMA)
+        posts = self._read("postings")
         if terms is not None:
             posts = posts.where(F.col("term").isin(list(terms)))
         return posts
@@ -154,7 +94,7 @@ class StreamingSearchIndex:
         terms' posting lists only, dl/N/S from the doc-stats table;
         equals (and hash-matches the oracle of) the batch ranker over
         the union of every indexed batch."""
-        stats = self._read("docstats", _DOCSTATS_SCHEMA)
+        stats = self._read("docstats")
         corpus = stats.agg(F.count("*").alias("n_docs"),
                            F.sum("dl").alias("s_dl"))
         tf = (self.postings(query_terms)
@@ -177,11 +117,7 @@ class StreamingSearchIndex:
         ).withColumnRenamed("doc_id", self.id_col)
 
 
-# Right-to-be-forgotten support: tombstone epochs applied at read time.
-_FORGETS_SCHEMA = StructType([StructField("doc_id", LongType())])
-
-
-class ForgettingSearchIndex(StreamingSearchIndex):
+class ForgettingSearchIndex(Forgettable, StreamingSearchIndex):
     """StreamingSearchIndex with document removal (the right-to-be-
     forgotten pass every training-data store eventually needs): `forget`
     writes a tombstone epoch and every read anti-joins the accumulated
@@ -194,48 +130,3 @@ class ForgettingSearchIndex(StreamingSearchIndex):
     Storage addition:
     - <root>/forgets/epoch=N : (doc_id) tombstones
     """
-
-    def _forgotten(self) -> DataFrame:
-        eps = self._epochs("forgets")
-        if not eps:
-            return self.spark.createDataFrame([], _FORGETS_SCHEMA)
-        paths = [f"{self.root}/forgets/epoch={e}" for e in eps]
-        return self.spark.read.schema(_FORGETS_SCHEMA).parquet(*paths)
-
-    def forget(self, doc_ids: DataFrame, epoch_id: int | None = None
-               ) -> None:
-        """Tombstone a frame of (doc_id) rows. Epoch-scoped overwrite —
-        replaying a forget rewrites identical tombstones."""
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "forgets")
-        (doc_ids.select(F.col(self.id_col).cast("long").alias("doc_id"))
-         .distinct().coalesce(1)
-         .write.mode("overwrite").parquet(
-             f"{self.root}/forgets/epoch={epoch_id}"))
-
-    def _read(self, sub: str, schema: StructType) -> DataFrame:
-        df = super()._read(sub, schema)
-        if sub in ("postings", "docstats"):
-            return df.join(self._forgotten(), on="doc_id", how="anti")
-        return df
-
-    def _has_hidden_rows(self, sub: str) -> bool:
-        return bool(self._epochs("forgets"))
-
-    def process_batch(self, new_docs: DataFrame,
-                      epoch_id: int | None = None) -> None:
-        """Reject re-ingest of a forgotten doc_id: tombstones apply to
-        ALL epochs at read time (no epoch ordering), so a doc ingested
-        after its forget would be silently invisible forever. Forgotten
-        ids are permanently retired from the id space — a collision is a
-        caller bug, surfaced loudly instead of swallowed."""
-        clash = (new_docs
-                 .select(F.col(self.id_col).cast("long").alias("doc_id"))
-                 .join(self._forgotten(), on="doc_id", how="semi")
-                 .limit(5).collect())
-        if clash:
-            ids = sorted(r["doc_id"] for r in clash)
-            raise ValueError(
-                f"doc_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under a fresh doc_id")
-        super().process_batch(new_docs, epoch_id)

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from dbsync_spark.functions.dedup import _sig_bank_rows, simhash
-from dbsync_spark.streaming.state import next_epoch
+from dbsync_spark.streaming.state import EpochIndex, Forgettable, next_epoch
 
 _BANKS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -61,11 +61,19 @@ _PAIRS_SCHEMA = StructType([
 _FPS_SCHEMA = StructType([StructField("simhash", LongType())])
 
 
-class StreamingSimhashIndex:
+class StreamingSimhashIndex(EpochIndex):
     """Incremental SimHash pair maintenance over parquet state dirs.
     Call `process_batch` per micro-batch of (doc_id, text) documents
     (directly or via `foreach_batch_handler()`). Batch doc_ids must be
-    globally unique (the CDC id contract)."""
+    globally unique (the CDC id contract). banks, fps and pairs are each
+    plain append-only unions over epochs (pairs() distincts anyway), so
+    each sub merges into one epoch dir independently ("union"
+    compaction) — a crash between two subs leaves both individually
+    consistent."""
+
+    SUBS = {"banks": _BANKS_SCHEMA, "fps": _FPS_SCHEMA,
+            "pairs": _PAIRS_SCHEMA}
+    PRIMARY = "banks"
 
     def __init__(self, spark: SparkSession, root: str,
                  max_hamming: int = 3, bits: int = 32, banks: int = 4,
@@ -74,25 +82,12 @@ class StreamingSimhashIndex:
             raise ValueError(
                 f"pigeonhole recall requires max_hamming <= banks - 1 "
                 f"(got max_hamming={max_hamming}, banks={banks})")
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.max_hamming = max_hamming
         self.bits = bits
         self.banks = banks
         self.text_col = text_col
         self.id_col = id_col
-
-    def _epochs(self, sub: str) -> list[int]:
-        from dbsync_spark.streaming.state import list_epochs
-
-        return list_epochs(self.root, sub)
-
-    def _read(self, sub: str, schema: StructType,
-              epochs: list[int]) -> DataFrame:
-        if not epochs:
-            return self.spark.createDataFrame([], schema)
-        paths = [f"{self.root}/{sub}/epoch={e}" for e in epochs]
-        return self.spark.read.schema(schema).parquet(*paths)
 
     def _bank_rows(self, docs: DataFrame) -> DataFrame:
         fp = simhash(docs, self.text_col, self.id_col, self.bits)
@@ -115,28 +110,23 @@ class StreamingSimhashIndex:
         batch's bank rows and exactly-the-new pairs; returns the new
         pairs. Epoch-scoped overwrite — a replayed epoch rewrites its
         own files with identical content."""
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "banks")
+        epoch_id = self._begin(new_docs, epoch_id)
         before = [e for e in self._epochs("banks") if e < epoch_id]
         fps_before = [e for e in self._epochs("fps") if e < epoch_id]
 
         new_rows = self._bank_rows(new_docs)
-        new_rows.write.mode("overwrite").parquet(
-            f"{self.root}/banks/epoch={epoch_id}")
-        new_rows = self.spark.read.schema(_BANKS_SCHEMA).parquet(
-            f"{self.root}/banks/epoch={epoch_id}")
+        self._write(new_rows, "banks", epoch_id)
+        new_rows = self._read_raw("banks", epochs=[epoch_id])
 
         # maintain the distinct-fingerprint table: persist only the fps
         # FIRST SEEN this epoch (epochs are therefore disjoint and their
         # plain union is the distinct set — no per-batch wide distinct)
-        prior_fps = self._read("fps", _FPS_SCHEMA, fps_before)
+        prior_fps = self._read("fps", epochs=fps_before)
         batch_fps = (new_rows.where(F.col("bank") == 0)
                      .select("simhash").distinct())
         fresh = batch_fps.join(prior_fps, on="simhash", how="anti")
-        fresh.write.mode("overwrite").parquet(
-            f"{self.root}/fps/epoch={epoch_id}")
-        fresh = self.spark.read.schema(_FPS_SCHEMA).parquet(
-            f"{self.root}/fps/epoch={epoch_id}")
+        self._write(fresh, "fps", epoch_id)
+        fresh = self._read_raw("fps", epochs=[epoch_id])
         all_fps = prior_fps.unionByName(fresh)
 
         # fp-level pigeonhole probe: batch fingerprints vs all
@@ -161,7 +151,7 @@ class StreamingSimhashIndex:
         # members on the base side (bank=0 rows are one row per doc)
         docs_n = new_rows.where(F.col("bank") == 0).select(
             F.col("doc_id").alias("doc_n"), F.col("simhash").alias("sig_n"))
-        all_rows = (self._read("banks", _BANKS_SCHEMA, before)
+        all_rows = (self._read("banks", epochs=before)
                     .unionByName(new_rows))
         docs_all = all_rows.where(F.col("bank") == 0).select(
             F.col("doc_id").alias("doc_o"), F.col("simhash").alias("sig_o"))
@@ -172,59 +162,19 @@ class StreamingSimhashIndex:
                          F.greatest("doc_n", "doc_o").alias("doc_b"),
                          "hamming")
                  .distinct())
-        pairs.write.mode("overwrite").parquet(
-            f"{self.root}/pairs/epoch={epoch_id}")
-        return self.spark.read.schema(_PAIRS_SCHEMA).parquet(
-            f"{self.root}/pairs/epoch={epoch_id}")
+        self._write(pairs, "pairs", epoch_id)
+        return self._read_raw("pairs", epochs=[epoch_id])
 
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
-
-    def compact(self) -> None:
-        """OPTIMIZE-style maintenance: banks and pairs are both plain
-        append-only unions over epochs (pairs() distincts anyway), so
-        each sub independently merges into one epoch dir via the shared
-        crash-safe staged swap — a crash between the two subs leaves
-        both individually consistent. Quiescent-caller discipline: run
-        only past the stream's checkpoint (a replay of a pre-compaction
-        epoch id would re-append rows the merged epoch already holds)."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  pending_compaction,
-                                                  staged_compact)
-
-        for sub, schema in (("banks", _BANKS_SCHEMA),
-                            ("fps", _FPS_SCHEMA),
-                            ("pairs", _PAIRS_SCHEMA)):
-            if pending_compaction(self.root, sub):
-                finish_compact(self.root, sub)
-            eps = self._epochs(sub)
-            if eps and (len(eps) > 1 or self._erasure_pending()):
-                # the staged state is the READ-path view, so the
-                # Forgetting subclass's tombstoned rows erase here
-                staged_compact(self._read(sub, schema, eps).distinct(),
-                               self.root, sub, eps)
-        self._mark_erased()
-
-    def _erasure_pending(self) -> bool:
-        return False
-
-    def _mark_erased(self) -> None:
-        return None
+    def _compaction_view(self, sub: str, eps: list[int]) -> DataFrame:
+        return super()._compaction_view(sub, eps).distinct()
 
     def pairs(self) -> DataFrame:
         """Distinct accumulated pairs (a pair is emitted by exactly one
         epoch under disjoint batches; distinct also absorbs replays)."""
-        return self._read("pairs", _PAIRS_SCHEMA,
-                          self._epochs("pairs")).distinct()
+        return self._read("pairs").distinct()
 
 
-_FORGETS_SCHEMA = StructType([StructField("doc_id", LongType())])
-
-
-class ForgettingSimhashIndex(StreamingSimhashIndex):
+class ForgettingSimhashIndex(Forgettable, StreamingSimhashIndex):
     """StreamingSimhashIndex with right-to-be-forgotten — the seventh
     forgetting family, and the first flushed out by the structural
     guard (tests/test_forget.py::test_every_doc_attributed_index_has_
@@ -258,13 +208,6 @@ class ForgettingSimhashIndex(StreamingSimhashIndex):
     never-fed-index behavior. Forgotten doc ids are permanently retired
     (re-ingest raises), matching the other families."""
 
-    def _forgotten(self) -> DataFrame:
-        from dbsync_spark.sources.tables import read_state
-
-        return read_state(self.spark, f"{self.root}/forgets",
-                          read_schema=_FORGETS_SCHEMA,
-                          empty_schema=_FORGETS_SCHEMA)
-
     def _dead(self) -> DataFrame:
         """Fingerprints with no surviving holder, derived by folding
         the per-event death deltas against the raw first-seen table:
@@ -277,46 +220,21 @@ class ForgettingSimhashIndex(StreamingSimhashIndex):
             return self.spark.createDataFrame([], _FPS_SCHEMA)
         deaths = (self._read_raw_deadfps(d_eps)
                   .groupBy("simhash").agg(F.count("*").alias("_deaths")))
-        seen = (StreamingSimhashIndex._read(
-                    self, "fps", _FPS_SCHEMA, self._epochs("fps"))
+        seen = (self._read_raw("fps")
                 .groupBy("simhash").agg(F.count("*").alias("_seen")))
         return (deaths.join(seen, on="simhash")
                 .where(F.col("_deaths") >= F.col("_seen"))
                 .select("simhash"))
 
     def _read_raw_deadfps(self, eps: list[int]) -> DataFrame:
-        paths = [f"{self.root}/deadfps/epoch={e}" for e in eps]
-        return self.spark.read.schema(_FPS_SCHEMA).parquet(*paths)
+        return self._read_raw("deadfps", _FPS_SCHEMA, eps)
 
-    def _read(self, sub: str, schema: StructType,
-              epochs: list[int]) -> DataFrame:
+    def _read(self, sub: str, schema: StructType | None = None,
+              epochs: list[int] | None = None) -> DataFrame:
         df = super()._read(sub, schema, epochs)
-        if sub == "banks":
-            return df.join(self._forgotten(), on="doc_id", how="anti")
         if sub == "fps":
             return df.join(self._dead(), on="simhash", how="anti")
-        if sub == "pairs":
-            gone = self._forgotten()
-            return (df.join(gone.select(F.col("doc_id").alias("doc_a")),
-                            on="doc_a", how="anti")
-                    .join(gone.select(F.col("doc_id").alias("doc_b")),
-                          on="doc_b", how="anti")
-                    # string-keyed joins move the key column to the
-                    # front; restore the schema order
-                    .select(*schema.fieldNames()))
         return df
-
-    def _forgotten_before(self, epoch_id: int) -> DataFrame:
-        """Tombstones recorded by forget epochs STRICTLY BEFORE
-        `epoch_id` — the view a replay of epoch `epoch_id` must compute
-        against (reading `_forgotten()` lazily and then overwriting this
-        epoch's file would re-scan and see the replayed event's own
-        ids, emptying its death delta on replay)."""
-        eps = [e for e in self._epochs("forgets") if e < epoch_id]
-        if not eps:
-            return self.spark.createDataFrame([], _FORGETS_SCHEMA)
-        paths = [f"{self.root}/forgets/epoch={e}" for e in eps]
-        return self.spark.read.schema(_FORGETS_SCHEMA).parquet(*paths)
 
     def forget(self, doc_ids: DataFrame, epoch_id: int | None = None
                ) -> None:
@@ -342,48 +260,33 @@ class ForgettingSimhashIndex(StreamingSimhashIndex):
         ids = doc_ids.select(F.col("doc_id").cast("long")).distinct()
         if epoch_id is None:
             epoch_id = next_epoch(self.root, "forgets")
-        eff = ids.join(self._forgotten_before(epoch_id), on="doc_id",
+        eff = ids.join(self._forgotten(before=epoch_id), on="doc_id",
                        how="anti")
-        (eff.coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.root}/forgets/epoch={epoch_id}"))
-        eff = self.spark.read.schema(_FORGETS_SCHEMA).parquet(
-            f"{self.root}/forgets/epoch={epoch_id}")
-        eps = self._epochs("banks")
-        raw0 = (StreamingSimhashIndex._read(self, "banks", _BANKS_SCHEMA,
-                                            eps)
-                .where(F.col("bank") == 0))
+        self._write(eff.coalesce(1), "forgets", epoch_id)
+        eff = self._read_raw("forgets", self._forgets_schema(), [epoch_id])
+        raw0 = self._read_raw("banks").where(F.col("bank") == 0)
         gone_fps = (raw0.join(eff, on="doc_id", how="semi")
                     .select("simhash").distinct())
         surviving = raw0.join(self._forgotten(), on="doc_id", how="anti")
         still_held = (surviving.join(gone_fps, on="simhash", how="semi")
                       .select("simhash").distinct())
         new_dead = gone_fps.join(still_held, on="simhash", how="anti")
-        (new_dead.select("simhash").distinct().coalesce(1)
-         .write.mode("overwrite")
-         .parquet(f"{self.root}/deadfps/epoch={epoch_id}"))
+        self._write(new_dead.select("simhash").distinct().coalesce(1),
+                    "deadfps", epoch_id)
 
-    def process_batch(self, new_docs: DataFrame,
-                      epoch_id: int | None = None) -> DataFrame:
+    def _begin(self, new_docs: DataFrame, epoch_id: int | None) -> int:
         # no revival bookkeeping needed: a batch re-introducing a dead
         # fp lands it in this epoch's FIRST-SEEN delta (the dead set is
         # subtracted from the prior-fps view), and that re-appearance
         # itself flips the derived dead test (deaths >= occurrences)
         self._recover_compact()
-        clash = (new_docs.select(F.col(self.id_col).alias("doc_id"))
-                 .join(self._forgotten(), on="doc_id", how="semi"))
-        if not clash.isEmpty():
-            ids = [r.doc_id for r in clash.limit(5).collect()]
-            raise ValueError(
-                f"doc_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under new ids")
-        return super().process_batch(new_docs, epoch_id)
+        return super()._begin(new_docs, epoch_id)
 
     def _drop_dead_deltas(self) -> None:
         import shutil
 
         for e in self._epochs("deadfps"):
-            shutil.rmtree(f"{self.root}/deadfps/epoch={e}",
-                          ignore_errors=True)
+            shutil.rmtree(self._path("deadfps", e), ignore_errors=True)
 
     def _recover_compact(self) -> None:
         """Finish a crashed compact() (round-9 ADVICE, low): the
@@ -398,19 +301,7 @@ class ForgettingSimhashIndex(StreamingSimhashIndex):
         (process_batch / forget / compact), so recovery is automatic
         on the next operation — the same protocol ForgettingSpanIndex
         uses for its cross-sub swap."""
-        import os
-
-        marker = f"{self.root}/_compact_ready"
-        if not os.path.exists(marker):
-            return
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  pending_compaction)
-
-        for sub in ("banks", "fps", "pairs"):
-            if pending_compaction(self.root, sub):
-                finish_compact(self.root, sub)
-        self._drop_dead_deltas()
-        os.remove(marker)
+        self._recover_publish(self.SUBS, then=self._drop_dead_deltas)
 
     def compact(self) -> None:
         """Physically erase tombstoned bank/pair rows and dead fps (the
@@ -428,48 +319,20 @@ class ForgettingSimhashIndex(StreamingSimhashIndex):
         intact (marker absent — stale stagings are garbage) or a
         marker-committed set of consistent staged copies that the next
         operation publishes verbatim via _recover_compact()."""
-        import os
-        import shutil
-
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  stage_compact)
+        from dbsync_spark.streaming.state import stage_compact
 
         self._recover_compact()
-        marker = f"{self.root}/_compact_ready"
+        n, erase = self._erasure()
         staged: list[str] = []
-        for sub, schema in (("banks", _BANKS_SCHEMA),
-                            ("fps", _FPS_SCHEMA),
-                            ("pairs", _PAIRS_SCHEMA)):
+        for sub in self.SUBS:
             eps = self._epochs(sub)
-            if eps and (len(eps) > 1 or self._erasure_pending()):
-                shutil.rmtree(f"{self.root}/{sub}/_compacting",
-                              ignore_errors=True)
-                stage_compact(self._read(sub, schema, eps).distinct(),
-                              self.root, sub, eps)
+            if eps and (len(eps) > 1 or erase):
+                stage_compact(self._compaction_view(sub, eps), self.root,
+                              sub, eps)
                 staged.append(sub)
-        if staged:
-            with open(marker, "w") as fh:
-                fh.write("ready\n")
-            for sub in staged:
-                finish_compact(self.root, sub)
         # non-vacuous deltas imply a forget since the last compact,
-        # which implies _erasure_pending() staged fps above; reaching
-        # here un-staged means the deltas are empty files — safe either
-        # way to drop them now
-        self._drop_dead_deltas()
-        if staged:
-            os.remove(marker)
-        self._mark_erased()
-
-    def _erasure_pending(self) -> bool:
-        from dbsync_spark.streaming.state import erasure_pending
-
-        n = self._forgotten().count()
-        return bool(n) and erasure_pending(self.root, "banks", n)
-
-    def _mark_erased(self) -> None:
-        from dbsync_spark.streaming.state import record_erasure
-
-        n = self._forgotten().count()
-        if n:
-            record_erasure(self.root, "banks", n)
+        # which implies erasure was pending and fps was staged above;
+        # reaching here un-staged means the deltas are empty files —
+        # safe either way to drop them now
+        self._publish_staged(staged, then=self._drop_dead_deltas)
+        self._mark_erased(n)

@@ -64,7 +64,8 @@ from dbsync_spark.functions.dedup import (_chunked_union,
                                           simjoin_rank_prefix,
                                           simjoin_verify_arrays)
 from dbsync_spark.sources.tables import read_state
-from dbsync_spark.streaming.state import next_epoch, write_parts
+from dbsync_spark.streaming.state import (EpochIndex, Forgettable,
+                                          write_parts)
 
 _SETS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -107,7 +108,7 @@ def _in_list(col: str, vals) -> F.Column:
     return F.expr(f"{col} IN ({','.join(str(int(v)) for v in vals)})")
 
 
-class StreamingSimJoinIndex:
+class StreamingSimJoinIndex(EpochIndex):
     """Incremental exact similarity join over parquet state dirs. Call
     `process_batch` per micro-batch (directly, or via
     `foreach_batch_handler()` from a writeStream).
@@ -128,15 +129,30 @@ class StreamingSimJoinIndex:
     (index-proportional per-batch cost). Retained ONLY as the measured
     baseline for tools/simjoin_soak.py's flat-vs-growing comparison and
     as a property cross-check in tests; the default path is the one to
-    deploy."""
+    deploy.
+
+    Compaction ("union"): sets/arrays/pairs are set unions over epochs
+    and dfreq deltas are additive (recomputed from the surviving set
+    rows), so query results are unchanged while file count and the
+    dfreq read's epoch factor go O(1). The bucketed dirs (`_b`/`_d`)
+    and the within-file sort survive the rewrite (LAYOUT), so probe
+    pruning is unchanged. For the Forgetting variant this also erases
+    the one place forgotten docs could still leave a trace — their
+    dfreq counts, which between compactions only influence candidate
+    ORDER."""
+
+    SUBS = {"sets": _SETS_SCHEMA, "arrays": _ARRAYS_SCHEMA,
+            "pairs": _PAIRS_SCHEMA, "dfreq": _DFREQ_SCHEMA}
+    PRIMARY = "sets"
+    LAYOUT = {"sets": (["_b"], ["_h"]), "arrays": (["_d"], ["doc_id"]),
+              "dfreq": (["_b"], ["_h"])}
 
     def __init__(self, spark: SparkSession, root: str,
                  threshold_num: int = 4, threshold_den: int = 5,
                  shingle_fn=None, n_buckets: int = 32,
                  full_reprobe: bool = False,
                  verify_chunks: int | None = None):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.num = threshold_num
         self.den = threshold_den
         self.shingle_fn = shingle_fn
@@ -192,9 +208,7 @@ class StreamingSimJoinIndex:
         (round-10: the writes are off the critical path, so the probe
         must not race the directory listing against them; the batch's
         own contribution is unioned in-memory by the caller instead)."""
-        from dbsync_spark.streaming.state import list_epochs
-
-        eps = [e for e in list_epochs(self.root, sub) if e < epoch_id]
+        eps = [e for e in self._epochs(sub) if e < epoch_id]
         if not eps:
             return self._empty(schema, bucket_col)
         df = (self.spark.read.schema(schema)
@@ -205,28 +219,22 @@ class StreamingSimJoinIndex:
         cols = schema.fieldNames() + ([bucket_col] if bucket_col else [])
         return df.select(*cols)
 
-    # identity in the base class; the Forgetting subclass anti-joins
-    # tombstones here so BOTH the full and the before-epoch readers
-    # see the filtered view
-    def _filter_sets(self, df: DataFrame) -> DataFrame:
-        return df
-
-    def _filter_arrays(self, df: DataFrame) -> DataFrame:
-        return df
-
+    # the Forgetting variant hides tombstoned docs here, so BOTH the
+    # full and the before-epoch (concurrent-write probe) readers see the
+    # filtered view
     def _sets(self) -> DataFrame:
-        return self._filter_sets(self._state("sets", _SETS_SCHEMA, "_b"))
+        return self._hide_forgotten(self._state("sets", _SETS_SCHEMA, "_b"))
 
     def _arrays(self) -> DataFrame:
-        return self._filter_arrays(
+        return self._hide_forgotten(
             self._state("arrays", _ARRAYS_SCHEMA, "_d"))
 
     def _sets_before(self, epoch_id: int) -> DataFrame:
-        return self._filter_sets(
+        return self._hide_forgotten(
             self._state_before("sets", _SETS_SCHEMA, "_b", epoch_id))
 
     def _arrays_before(self, epoch_id: int) -> DataFrame:
-        return self._filter_arrays(
+        return self._hide_forgotten(
             self._state_before("arrays", _ARRAYS_SCHEMA, "_d", epoch_id))
 
     def _dfreq_for(self, token_df: DataFrame, buckets: list[int],
@@ -447,13 +455,18 @@ class StreamingSimJoinIndex:
         # tasks carrying ~55 task-seconds of intersect work). Demanded
         # work is n_candidates x mean set width; hash-repartition the
         # touched arrays (tiny: <= prune-capped docs x one array row)
-        # so the intersect runs as wide as that work warrants.
+        # so the intersect runs as wide as that work warrants. Light
+        # demanded work collapses ver_parts to ~1, and a repartition
+        # that does not exceed the frame's own partition count would
+        # only NARROW the verify, so it is skipped then (the count is
+        # read only when ver_parts > 1: with AQE it costs a job).
         ver_parts = min(
             self.spark.sparkContext.defaultParallelism,
             max(1, int(n_cands * max(mean_width or 1.0, 1.0)) // 2_000_000
                 + 1))
-        arr_sets = arrays.select("doc_id", "_sh").repartition(
-            ver_parts, "doc_id")
+        arr_sets = arrays.select("doc_id", "_sh")
+        if ver_parts > 1 and ver_parts > arr_sets.rdd.getNumPartitions():
+            arr_sets = arr_sets.repartition(ver_parts, "doc_id")
         pairs = _chunked_union(
             cand, chunks,
             lambda c: simjoin_verify_arrays(
@@ -476,8 +489,7 @@ class StreamingSimJoinIndex:
         Batch doc_ids must be globally unique (the CDC id contract)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "sets")
+        epoch_id = self._begin(new_docs, epoch_id)
         new_docs = new_docs.select("doc_id", "text")
         if self.full_reprobe:
             return self._process_batch_full(new_docs, epoch_id)
@@ -576,17 +588,10 @@ class StreamingSimJoinIndex:
         return self.spark.read.parquet(
             f"{self.root}/pairs/epoch={epoch_id}")
 
-    def foreach_batch_handler(self):
-        """Adapter for `writeStream.foreachBatch` over a (doc_id, text)
-        stream."""
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
-
     def all_pairs(self) -> DataFrame:
         """Every qualifying pair persisted so far."""
-        return self._state("pairs", _PAIRS_SCHEMA, None)
+        return self._hide_forgotten(
+            self._state("pairs", _PAIRS_SCHEMA, None), _PAIRS_SCHEMA)
 
     def delta_files(self, sub: str = "sets") -> int:
         """Parquet-leaf count under a state sub — the quantity probe
@@ -619,61 +624,21 @@ class StreamingSimJoinIndex:
             return True
         return False
 
-    def compact(self) -> None:
-        """OPTIMIZE-style maintenance (streaming/state.staged_compact
-        crash-safe contract): merge every epoch into one per sub —
-        sets/arrays/pairs are set unions over epochs and dfreq deltas
-        are additive, so query results are unchanged while file count
-        and the dfreq read's epoch factor go O(1). The bucketed dirs
-        (`_b`/`_d`) are preserved through the rewrite, so probe pruning
-        is unchanged. For the Forgetting variant this also physically
-        erases tombstoned docs' rows AND rebuilds dfreq without their
-        contributions (erasing the one place forgotten docs could still
-        leave a trace — the candidate-order heuristic). Run only when
-        the feeding stream is quiescent past the compacted epochs."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  list_epochs,
-                                                  pending_compaction,
-                                                  staged_compact)
-
-        plan = {"sets": (self._sets, ["_b"], ["_h"]),
-                "arrays": (self._arrays, ["_d"], ["doc_id"]),
-                "pairs": (self.all_pairs, None, None)}
-        for sub, (reader, parts, sort) in plan.items():
-            if pending_compaction(self.root, sub):
-                finish_compact(self.root, sub)
-            eps = list_epochs(self.root, sub)
-            if not eps or (len(eps) <= 1 and not self._has_hidden_rows()):
-                continue
-            staged_compact(reader(), self.root, sub, eps,
-                           partition_by=parts, sort_within=sort)
-        # dfreq: recompute from the surviving (read-path-filtered) set
-        # rows — for the base class identical to summing the deltas
-        # (each doc's tokens counted once either way); for Forgetting,
-        # this is the physical erasure of forgotten docs' counts
-        if pending_compaction(self.root, "dfreq"):
-            finish_compact(self.root, "dfreq")
-        eps = list_epochs(self.root, "dfreq")
-        if eps and (len(eps) > 1 or self._has_hidden_rows()):
-            clean = (self._sets()
-                     .groupBy("_h").agg(F.count("*").alias("_df"))
-                     .withColumn("_b", F.pmod(F.col("_h"),
-                                              F.lit(self.nb)).cast("int")))
-            staged_compact(clean, self.root, "dfreq", eps,
-                           partition_by=["_b"], sort_within=["_h"])
-        self._mark_erased()
-
-    def _has_hidden_rows(self) -> bool:
-        return False
-
-    def _mark_erased(self) -> None:
-        return None
+    def _compaction_view(self, sub: str, eps: list[int]) -> DataFrame:
+        if sub == "dfreq":
+            # recompute from the surviving (read-path-filtered) set rows
+            # — for the base class identical to summing the deltas (each
+            # doc's tokens counted once either way); for Forgetting, the
+            # physical erasure of forgotten docs' counts
+            return (self._sets()
+                    .groupBy("_h").agg(F.count("*").alias("_df"))
+                    .withColumn("_b", F.pmod(F.col("_h"),
+                                             F.lit(self.nb)).cast("int")))
+        return {"sets": self._sets, "arrays": self._arrays,
+                "pairs": self.all_pairs}[sub]()
 
 
-_FORGETS_SCHEMA = StructType([StructField("doc_id", LongType())])
-
-
-class ForgettingSimJoinIndex(StreamingSimJoinIndex):
+class ForgettingSimJoinIndex(Forgettable, StreamingSimJoinIndex):
     """StreamingSimJoinIndex with right-to-be-forgotten: `forget`
     tombstones doc ids; set/array reads anti-join the tombstones
     (future probes can never match a forgotten doc) and `all_pairs`
@@ -684,66 +649,3 @@ class ForgettingSimJoinIndex(StreamingSimJoinIndex):
     is a pruning heuristic with no output effect — simjoin_rank_prefix
     docstring). Forgotten ids are permanently retired (re-ingest
     raises), matching the other forgetting families."""
-
-    def _forgotten(self) -> DataFrame:
-        return read_state(self.spark, f"{self.root}/forgets",
-                          read_schema=_FORGETS_SCHEMA,
-                          empty_schema=_FORGETS_SCHEMA)
-
-    def forget(self, doc_ids: DataFrame, epoch_id: int | None = None
-               ) -> None:
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "forgets")
-        (doc_ids.select(F.col("doc_id").cast("long")).distinct().coalesce(1)
-         .write.mode("overwrite").parquet(
-             f"{self.root}/forgets/epoch={epoch_id}"))
-
-    # filtering at the hook covers BOTH the full readers and the
-    # before-epoch probe readers (the concurrent-write probe path)
-    def _filter_sets(self, df: DataFrame) -> DataFrame:
-        return df.join(self._forgotten(), on="doc_id", how="anti")
-
-    def _filter_arrays(self, df: DataFrame) -> DataFrame:
-        return df.join(self._forgotten(), on="doc_id", how="anti")
-
-    def process_batch(self, new_docs: DataFrame,
-                      epoch_id: int | None = None) -> DataFrame:
-        clash = (new_docs.select("doc_id")
-                 .join(self._forgotten(), on="doc_id", how="semi"))
-        if not clash.isEmpty():
-            ids = [r.doc_id for r in clash.limit(5).collect()]
-            raise ValueError(
-                f"doc_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under new ids")
-        return super().process_batch(new_docs, epoch_id)
-
-    def all_pairs(self) -> DataFrame:
-        gone = self._forgotten()
-        pairs = super().all_pairs()
-        return (pairs
-                .join(gone.select(F.col("doc_id").alias("doc_a")),
-                      on="doc_a", how="anti")
-                .join(gone.select(F.col("doc_id").alias("doc_b")),
-                      on="doc_b", how="anti")
-                # string-keyed joins move the key column to the front;
-                # restore the schema order
-                .select(*_PAIRS_SCHEMA.fieldNames()))
-
-    def _has_hidden_rows(self) -> bool:
-        """True while tombstones exist that compaction has not yet
-        physically applied (streaming/state.erasure_pending marker —
-        without it every maintenance tick would re-run the full staged
-        rewrite of already-erased state, O(state) work per tick)."""
-        from dbsync_spark.streaming.state import erasure_pending
-
-        n = self._forgotten().count()
-        if n == 0:
-            return False
-        return erasure_pending(self.root, "sets", n)
-
-    def _mark_erased(self) -> None:
-        from dbsync_spark.streaming.state import record_erasure
-
-        n = self._forgotten().count()
-        if n:
-            record_erasure(self.root, "sets", n)

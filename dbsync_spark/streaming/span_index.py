@@ -39,9 +39,8 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from dbsync_spark.functions.dedup import (_span_windows,
                                           _spans_from_dup_positions)
-from dbsync_spark.sources.tables import read_state
-
-from dbsync_spark.streaming.state import next_epoch
+from dbsync_spark.streaming.state import (EpochIndex, Forgettable,
+                                          stage_compact)
 
 _WINDOWS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -58,35 +57,34 @@ _SPANS_SCHEMA = StructType([
 _RESCORED_SCHEMA = StructType([StructField("doc_id", LongType())])
 
 
-class StreamingSpanIndex:
+class StreamingSpanIndex(EpochIndex):
     """Incremental exact-substring dedup over parquet state dirs. Call
     `process_batch` per micro-batch (directly, or via
     `foreach_batch_handler()` from a writeStream). Batch doc_ids must be
     globally unique across epochs (the CDC id contract)."""
 
+    # spans/rescored read untyped: their readers join on the
+    # partition-discovered epoch column as written
+    SUBS = {"windows": _WINDOWS_SCHEMA, "spans": None, "rescored": None}
+    PRIMARY = "windows"
+    DIR_READS = True
+
     def __init__(self, spark: SparkSession, root: str,
                  window_tokens: int = 6, min_docs: int = 2):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.window_tokens = window_tokens
         self.min_docs = min_docs
-
-    def _read(self, sub: str, schema: StructType) -> DataFrame:
-        return read_state(self.spark, f"{self.root}/{sub}",
-                          read_schema=schema, empty_schema=schema)
 
     def process_batch(self, new_docs: DataFrame, epoch_id: int | None = None
                       ) -> DataFrame:
         """Ingest a (doc_id, text) batch; persist and return the span
         rows of every document rescored by this batch."""
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "windows")
+        epoch_id = self._begin(new_docs, epoch_id)
         new_docs = new_docs.select("doc_id", "text")
         new_win = _span_windows(new_docs, "text", "doc_id",
                                 self.window_tokens)
-        new_win.write.mode("overwrite").parquet(
-            f"{self.root}/windows/epoch={epoch_id}")
-        index = self._read("windows", _WINDOWS_SCHEMA)  # incl. this epoch
+        self._write(new_win, "windows", epoch_id)
+        index = self._read("windows")  # incl. this epoch
 
         # docs to rescore: the batch itself + any doc sharing a window
         # hash with the batch where that hash is (now) duplicated
@@ -102,12 +100,9 @@ class StreamingSpanIndex:
 
         spans = self._rescore_spans(index, rescore)
 
-        spans.write.mode("overwrite").parquet(
-            f"{self.root}/spans/epoch={epoch_id}")
-        rescore.write.mode("overwrite").parquet(
-            f"{self.root}/rescored/epoch={epoch_id}")
-        return self.spark.read.parquet(
-            f"{self.root}/spans/epoch={epoch_id}")
+        self._write(spans, "spans", epoch_id)
+        self._write(rescore, "rescored", epoch_id)
+        return self.spark.read.parquet(self._path("spans", epoch_id))
 
     def _rescore_spans(self, index: DataFrame,
                        rescore: DataFrame) -> DataFrame:
@@ -126,14 +121,6 @@ class StreamingSpanIndex:
             rdf.where(F.col("wdf") >= self.min_docs).select("wh"), on="wh")
         return _spans_from_dup_positions(dup, "doc_id", self.window_tokens)
 
-    def foreach_batch_handler(self):
-        """Adapter for `writeStream.foreachBatch` over a (doc_id, text)
-        stream."""
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
-
     def compact(self) -> None:
         """OPTIMIZE-style maintenance (judge r5 item #6): windows merge
         to their plain union (append-only set); spans/rescored — whose
@@ -142,81 +129,60 @@ class StreamingSpanIndex:
         republished at the max epoch, so latest-per-doc resolves to the
         same rows afterwards.
 
-        Cross-sub crash safety via a commit marker: every sub is STAGED
-        first (live state untouched), a `_compact_ready` marker commits,
-        then every staging is published. Recovery on re-run: marker
-        present -> all stagings are consistent, finish them; marker
-        absent -> no publish ever ran, stale stagings are garbage,
-        restage from the intact live state. Readers between the two
-        publishes see a partial view — the same quiescent-caller window
-        the other staged compactions document."""
-        import os
+        Cross-sub crash safety via the commit marker
+        (EpochIndex._publish_staged): every sub is STAGED first (live
+        state untouched), the marker commits, then every staging is
+        published. Recovery on re-run: marker present -> all stagings
+        are consistent, finish them; marker absent -> no publish ever
+        ran, stale stagings are garbage, restage from the intact live
+        state. Readers between the two publishes see a partial view —
+        the same quiescent-caller window the other staged compactions
+        document."""
         import shutil
 
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  list_epochs,
-                                                  pending_compaction,
-                                                  stage_compact)
-
-        subs = ("windows", "spans", "rescored")
-        marker = f"{self.root}/_compact_ready"
-        if os.path.exists(marker):
-            for s in subs:
-                if pending_compaction(self.root, s):
-                    finish_compact(self.root, s)
-            os.remove(marker)
+        if self._recover_publish(self.SUBS):
             return
-        for s in subs:
+        for s in self.SUBS:
             shutil.rmtree(f"{self.root}/{s}/_compacting",
                           ignore_errors=True)
-        eps = list_epochs(self.root, "windows")
-        if not eps or (len(eps) <= 1 and not self._erasure_pending()):
+        n, erase = self._erasure()
+        eps = self._epochs("windows")
+        if not eps or (len(eps) <= 1 and not erase):
             return
-        stage_compact(self._read("windows", _WINDOWS_SCHEMA),
-                      self.root, "windows", eps)
-        sp_eps = list_epochs(self.root, "spans")
-        rs_eps = list_epochs(self.root, "rescored")
-        stage_compact(self.current_spans(), self.root, "spans", sp_eps)
-        stage_compact(self._rescored_distinct(),
-                      self.root, "rescored", rs_eps)
-        with open(marker, "w") as fh:
-            fh.write("ready\n")
-        for s in subs:
-            finish_compact(self.root, s)
-        os.remove(marker)
-        self._mark_erased()
+        stage_compact(self._read("windows"), self.root, "windows", eps)
+        self._stage_spans(self.current_spans(), self._rescored_distinct())
+        self._publish_staged(list(self.SUBS))
+        self._mark_erased(n)
 
-    def _erasure_pending(self) -> bool:
-        return False
-
-    def _mark_erased(self) -> None:
-        return None
+    def _stage_spans(self, spans: DataFrame, rescored: DataFrame) -> None:
+        """Stage the joined spans/rescored pair over their entire
+        history (published at their current max epochs)."""
+        stage_compact(spans, self.root, "spans", self._epochs("spans"))
+        stage_compact(rescored, self.root, "rescored",
+                      self._epochs("rescored"))
 
     def _rescored_distinct(self) -> DataFrame:
-        """Distinct rescored-doc ids (the Forgetting subclass filters
-        tombstoned docs here so compaction physically erases them)."""
-        rescored = read_state(self.spark, f"{self.root}/rescored",
-                              read_schema=_RESCORED_SCHEMA,
-                              empty_schema=_RESCORED_SCHEMA)
-        return rescored.select("doc_id").distinct()
+        """Distinct rescored-doc ids (forgotten docs hidden, so
+        compaction physically erases them)."""
+        return self._hide_forgotten(
+            self._read_raw("rescored", _RESCORED_SCHEMA)
+            .select("doc_id").distinct())
 
     def current_spans(self) -> DataFrame:
         """The span table as of the latest processed epoch: each doc's
         rows from its HIGHEST rescore epoch (latest-epoch-wins; empty
         frame before the first batch)."""
-        res = read_state(self.spark, f"{self.root}/rescored")
-        spans = read_state(self.spark, f"{self.root}/spans")
+        res = self._read_raw("rescored")
+        spans = self._read_raw("spans")
         if res is None or spans is None:
-            return self.spark.createDataFrame([], _SPANS_SCHEMA)
-        latest = res.groupBy("doc_id").agg(F.max("epoch").alias("epoch"))
-        return (spans.join(latest, on=["doc_id", "epoch"])
-                .drop("epoch"))
+            out = self.spark.createDataFrame([], _SPANS_SCHEMA)
+        else:
+            latest = res.groupBy("doc_id").agg(F.max("epoch").alias("epoch"))
+            out = spans.join(latest, on=["doc_id", "epoch"]).drop("epoch")
+        return self._hide_forgotten(out)
 
 
-_SPAN_FORGETS_SCHEMA = StructType([StructField("doc_id", LongType())])
-
-
-class ForgettingSpanIndex(StreamingSpanIndex):
+class ForgettingSpanIndex(Forgettable, StreamingSpanIndex):
     """StreamingSpanIndex with right-to-be-forgotten — flushed out by
     the structural forgetting guard. Removal is NON-LOCAL here, like the
     cluster index: a span is recorded because its windows appear in
@@ -232,36 +198,6 @@ class ForgettingSpanIndex(StreamingSpanIndex):
     and physically erased at compact(). Forgotten ids are permanently
     retired (re-ingest raises)."""
 
-    def _forgotten(self) -> DataFrame:
-        return read_state(self.spark, f"{self.root}/forgets",
-                          read_schema=_SPAN_FORGETS_SCHEMA,
-                          empty_schema=_SPAN_FORGETS_SCHEMA)
-
-    def _read(self, sub: str, schema: StructType) -> DataFrame:
-        df = super()._read(sub, schema)
-        if sub == "windows":
-            return df.join(self._forgotten(), on="doc_id", how="anti")
-        return df
-
-    def current_spans(self) -> DataFrame:
-        return super().current_spans().join(self._forgotten(),
-                                            on="doc_id", how="anti")
-
-    def _rescored_distinct(self) -> DataFrame:
-        return super()._rescored_distinct().join(self._forgotten(),
-                                                 on="doc_id", how="anti")
-
-    def process_batch(self, new_docs: DataFrame,
-                      epoch_id: int | None = None) -> DataFrame:
-        clash = (new_docs.select("doc_id")
-                 .join(self._forgotten(), on="doc_id", how="semi"))
-        if not clash.isEmpty():
-            ids = [r.doc_id for r in clash.limit(5).collect()]
-            raise ValueError(
-                f"doc_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under new ids")
-        return super().process_batch(new_docs, epoch_id)
-
     def forget(self, doc_ids: DataFrame, epoch_id: int | None = None
                ) -> None:
         """Tombstone doc ids, rescore their duplication neighborhood,
@@ -270,7 +206,7 @@ class ForgettingSpanIndex(StreamingSpanIndex):
         converges to the same state.
 
         Cross-sub crash safety mirrors compact(): spans and rescored are
-        a JOINED pair on the read path, so both are STAGED first, a
+        a JOINED pair on the read path, so both are STAGED first, the
         `_compact_ready` marker commits, then both are published. A
         crash between the two publishes previously (round-8 ADVICE,
         medium) left spans at the max epoch while rescored kept older
@@ -279,33 +215,15 @@ class ForgettingSpanIndex(StreamingSpanIndex):
         Now: marker present on entry (here or in compact()) -> finish
         the consistent pending stagings before doing anything else;
         marker absent -> stale stagings are garbage, restage."""
-        import os
-        import shutil
-
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  list_epochs,
-                                                  next_epoch,
-                                                  pending_compaction,
-                                                  stage_compact)
-
-        marker = f"{self.root}/_compact_ready"
-        if os.path.exists(marker):
-            for s in ("windows", "spans", "rescored"):
-                if pending_compaction(self.root, s):
-                    finish_compact(self.root, s)
-            os.remove(marker)
+        self._recover_publish(self.SUBS)
         ids = doc_ids.select(F.col("doc_id").cast("long")).distinct()
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "forgets")
-        (ids.coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.root}/forgets/epoch={epoch_id}"))
+        super().forget(ids, epoch_id)
         # neighborhood: surviving docs sharing any window hash with the
         # forgotten docs' (still-present, read-hidden) window rows
-        raw_win = StreamingSpanIndex._read(self, "windows",
-                                           _WINDOWS_SCHEMA)
-        gone_wh = (raw_win.join(ids, on="doc_id", how="semi")
+        gone_wh = (self._read_raw("windows").join(ids, on="doc_id",
+                                                  how="semi")
                    .select("wh").distinct())
-        index = self._read("windows", _WINDOWS_SCHEMA)  # filtered
+        index = self._read("windows")  # filtered
         affected = (index.join(gone_wh, on="wh", how="semi")
                     .select("doc_id").distinct())
         respans = self._rescore_spans(index, affected)
@@ -314,30 +232,7 @@ class ForgettingSpanIndex(StreamingSpanIndex):
         new_spans = keep.unionByName(respans)
         new_rescored = (self._rescored_distinct()
                         .unionByName(affected).distinct())
-        sp_eps = list_epochs(self.root, "spans")
-        rs_eps = list_epochs(self.root, "rescored")
-        if not sp_eps:
+        if not self._epochs("spans"):
             return  # nothing ingested yet; tombstones alone suffice
-        for s in ("spans", "rescored"):
-            shutil.rmtree(f"{self.root}/{s}/_compacting",
-                          ignore_errors=True)
-        stage_compact(new_spans, self.root, "spans", sp_eps)
-        stage_compact(new_rescored, self.root, "rescored", rs_eps)
-        with open(marker, "w") as fh:
-            fh.write("ready\n")
-        finish_compact(self.root, "spans")
-        finish_compact(self.root, "rescored")
-        os.remove(marker)
-
-    def _erasure_pending(self) -> bool:
-        from dbsync_spark.streaming.state import erasure_pending
-
-        n = self._forgotten().count()
-        return bool(n) and erasure_pending(self.root, "windows", n)
-
-    def _mark_erased(self) -> None:
-        from dbsync_spark.streaming.state import record_erasure
-
-        n = self._forgotten().count()
-        if n:
-            record_erasure(self.root, "windows", n)
+        self._stage_spans(new_spans, new_rescored)
+        self._publish_staged(["spans", "rescored"])

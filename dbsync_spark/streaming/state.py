@@ -204,3 +204,300 @@ def prune_epochs(root: str, sub: str) -> int:
     for e in eps[:-1]:
         shutil.rmtree(f"{root}/{sub}/epoch={e}", ignore_errors=True)
     return max(len(eps) - 1, 0)
+
+
+class EpochIndex:
+    """The epoch lifecycle every streaming index service shares — the
+    epoch-idempotent foreachBatch sink of Structured Streaming: batch N
+    writes only `<root>/<sub>/epoch=N` dirs (overwrite mode), so a
+    replayed epoch rewrites exactly its own files and the state is a
+    function of the set of committed epochs.
+
+    Subclasses keep their ingest/query logic and DECLARE their state:
+
+    - `SUBS`: {sub: schema} of the epoch-scoped dirs the index holds, in
+      compaction order (schema None = read untyped, inferred from the
+      files);
+    - `PRIMARY`: the sub whose epoch ids number ingest (`next_epoch`);
+    - `COMPACTION`: "union" — the state is a union (or an additive sum)
+      over epochs, so compact() folds every epoch of each sub into one
+      via the staged crash-safe swap; or "cumulative" — epoch N already
+      holds the FULL state after N (latest epoch wins), so compact()
+      prunes the older epochs (prune_epochs);
+    - `DIR_READS`: how `_read` reads a whole sub. True reads the sub's
+      directory through sources/tables.read_state, which appends the
+      partition-discovered `epoch` column the latest-epoch-wins readers
+      rely on (dedup, span, ann, cluster, dtw; simjoin's bucketed reads
+      are its own); False unions the listed `epoch=N` paths, which
+      yields exactly the schema columns (search, bloom, dsir, simhash).
+      Each module keeps the way its existing readers and tests pin.
+    - `LAYOUT`: {sub: (partition_by, sort_within)} for subs whose
+      at-rest bucketing must survive compaction.
+
+    Forgetting variants add the `Forgettable` mixin. Tombstones live in
+    `<root>/forgets/epoch=N` as one long column (`tombstone_col`) and
+    are always read from the listed epoch paths (one way for every
+    index); `_read` hides every row attributed to a forgotten id, and
+    a batch carrying a forgotten id is rejected (ids are permanently
+    retired — tombstones apply to all epochs at read time, so a
+    re-ingested id would be silently invisible). Compaction stages the
+    read-path view, which physically erases the hidden rows, and then
+    records the applied tombstone count in `<sub>/epoch=N/_erased.json`
+    of `ERASURE_SUB` so already-erased state is not rewritten on every
+    maintenance tick."""
+
+    SUBS: dict = {}
+    PRIMARY = ""
+    COMPACTION = "union"
+    DIR_READS = False
+    LAYOUT: dict = {}
+    ERASURE_SUB: str | None = None
+    RETIRES_IDS = False
+    tombstone_col = "doc_id"
+
+    def __init__(self, spark, root: str):
+        self.spark = spark
+        self.root = root.rstrip("/")
+
+    # -- epochs ---------------------------------------------------------
+
+    def _epochs(self, sub: str | None = None) -> list[int]:
+        return list_epochs(self.root, sub or self.PRIMARY)
+
+    def _latest(self, sub: str | None = None,
+                before: int | None = None) -> int | None:
+        """Newest epoch of `sub` (strictly below `before` when given) —
+        the predecessor a cumulative epoch is computed from, so a replay
+        of epoch N reads the same state it read the first time."""
+        eps = [e for e in self._epochs(sub) if before is None or e < before]
+        return eps[-1] if eps else None
+
+    def _path(self, sub: str, epoch: int) -> str:
+        return f"{self.root}/{sub}/epoch={epoch}"
+
+    def _begin(self, batch, epoch_id: int | None) -> int:
+        """Admit one ingest batch: assign its epoch (foreachBatch callers
+        pass Spark's epoch id; direct calls get one past the newest) and,
+        on Forgetting variants, reject forgotten ids."""
+        if epoch_id is None:
+            epoch_id = next_epoch(self.root, self.PRIMARY)
+        if self.RETIRES_IDS:
+            self._check_not_retired(batch)
+        return epoch_id
+
+    def _write(self, df, sub: str, epoch: int) -> None:
+        df.write.mode("overwrite").parquet(self._path(sub, epoch))
+
+    def foreach_batch_handler(self, **batch_kwargs):
+        """Adapter for `writeStream.foreachBatch`; keyword arguments are
+        forwarded to every process_batch call."""
+        def handle(batch_df, epoch_id: int) -> None:
+            self.process_batch(batch_df, epoch_id, **batch_kwargs)
+
+        return handle
+
+    # -- reads ----------------------------------------------------------
+
+    def _read_raw(self, sub: str, schema=None, epochs: list[int] | None = None):
+        """Typed read of `sub` over `epochs` (all when None, in the
+        class's DIR_READS way). "No data yet" reads as an empty frame of
+        `schema`, or None for an untyped sub."""
+        from dbsync_spark.sources.tables import read_state
+
+        schema = schema if schema is not None else self.SUBS.get(sub)
+        if epochs is None and self.DIR_READS:
+            return read_state(self.spark, f"{self.root}/{sub}",
+                              read_schema=schema, empty_schema=schema)
+        eps = self._epochs(sub) if epochs is None else epochs
+        if not eps:
+            return (None if schema is None
+                    else self.spark.createDataFrame([], schema))
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*[self._path(sub, e) for e in eps])
+
+    def _read(self, sub: str, schema=None, epochs: list[int] | None = None):
+        """The read-path view of `sub`: the raw read minus rows of
+        forgotten ids."""
+        df = self._read_raw(sub, schema, epochs)
+        if df is None:
+            return None
+        return self._hide_forgotten(
+            df, schema if schema is not None else self.SUBS.get(sub))
+
+    def _read_epoch(self, sub: str, epoch: int | None):
+        """One epoch of cumulative state (empty before the first)."""
+        from dbsync_spark.sources.tables import read_state
+
+        schema = self.SUBS[sub]
+        if epoch is None:
+            return self.spark.createDataFrame([], schema)
+        return read_state(self.spark, self._path(sub, epoch),
+                          read_schema=schema, empty_schema=schema)
+
+    # -- tombstones -----------------------------------------------------
+
+    @property
+    def _id_col(self) -> str:
+        return getattr(self, "id_col", "doc_id")
+
+    def _forgets_schema(self):
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        return StructType([StructField(self.tombstone_col, LongType())])
+
+    def _forgotten(self, before: int | None = None):
+        """Tombstoned ids (from forget epochs strictly below `before`
+        when given — the view a replayed forget epoch must compute
+        against)."""
+        eps = [e for e in self._epochs("forgets")
+               if before is None or e < before]
+        return self._read_raw("forgets", self._forgets_schema(), eps)
+
+    def _check_not_retired(self, batch) -> None:
+        from pyspark.sql import functions as F
+
+        if not self._epochs("forgets"):
+            return
+        col = self.tombstone_col
+        clash = (batch.select(F.col(self._id_col).cast("long").alias(col))
+                 .join(self._forgotten(), on=col, how="semi")
+                 .limit(5).collect())
+        if clash:
+            ids = sorted(r[col] for r in clash)
+            raise ValueError(
+                f"{col}s {ids} were forgotten and are permanently "
+                "retired; re-ingest under fresh ids")
+
+    def _hide_forgotten(self, df, schema=None):
+        """Drop rows attributed to a forgotten id: rows keyed by the
+        tombstone column, and pair rows touching one on either side."""
+        from pyspark.sql import functions as F
+
+        if not self.RETIRES_IDS:
+            return df
+        col = self.tombstone_col
+        if col in df.columns:
+            return df.join(self._forgotten(), on=col, how="anti")
+        if "doc_a" not in df.columns:
+            return df
+        gone = self._forgotten()
+        out = (df.join(gone.select(F.col(col).alias("doc_a")),
+                       on="doc_a", how="anti")
+               .join(gone.select(F.col(col).alias("doc_b")),
+                     on="doc_b", how="anti"))
+        # string-keyed joins move the key column to the front; restore
+        # the schema order
+        return out.select(*(schema.fieldNames() if schema is not None
+                            else df.columns))
+
+    def _erasure(self) -> tuple[int, bool]:
+        """(distinct tombstone count, whether compaction still has to
+        erase some of them physically)."""
+        if not self.RETIRES_IDS or not self._epochs("forgets"):
+            return 0, False
+        n = self._forgotten().distinct().count()
+        return n, bool(n) and erasure_pending(
+            self.root, self.ERASURE_SUB or self.PRIMARY, n)
+
+    def _mark_erased(self, n: int) -> None:
+        if n:
+            record_erasure(self.root, self.ERASURE_SUB or self.PRIMARY, n)
+
+    # -- compaction -----------------------------------------------------
+
+    def compact(self):
+        """OPTIMIZE-style maintenance, query results unchanged by
+        construction. Cumulative state: delete every epoch but the
+        newest of each sub (no staging needed — reads take the newest
+        epoch at every intermediate point); returns the dirs removed.
+        Union state: per sub, first complete any interrupted swap, then
+        stage the read-path view and publish it as the max covered epoch
+        (staged_compact), so the file count goes O(n_epochs) -> O(1) and
+        forgotten rows are physically erased. Run only when the feeding
+        stream is quiescent past the compacted epochs: replaying an old
+        epoch id afterwards would re-append rows the merged epoch holds."""
+        if self.COMPACTION == "cumulative":
+            return sum(prune_epochs(self.root, sub) for sub in self.SUBS)
+        for sub in self.SUBS:
+            if pending_compaction(self.root, sub):
+                finish_compact(self.root, sub)
+        n, erase = self._erasure()
+        for sub in self.SUBS:
+            eps = self._compaction_epochs(sub)
+            if eps and (len(eps) > 1 or erase):
+                parts, sort = self.LAYOUT.get(sub, (None, None))
+                staged_compact(self._compaction_view(sub, eps), self.root,
+                               sub, eps, partition_by=parts,
+                               sort_within=sort)
+        self._mark_erased(n)
+
+    def _compaction_epochs(self, sub: str) -> list[int]:
+        return self._epochs(sub)
+
+    def _compaction_view(self, sub: str, eps: list[int]):
+        """The merged state one compacted epoch of `sub` holds: by
+        default the read-path view of the covered epochs."""
+        if sub == "forgets":
+            return self._forgotten().distinct()
+        return self._read(sub, epochs=eps)
+
+    def _recover_publish(self, subs, then=None) -> bool:
+        """Finish a multi-sub publish a crash interrupted (see
+        _publish_staged), running its `then` step before the marker
+        goes; returns whether one was pending."""
+        import os
+
+        marker = f"{self.root}/_compact_ready"
+        if not os.path.exists(marker):
+            return False
+        for sub in subs:
+            if pending_compaction(self.root, sub):
+                finish_compact(self.root, sub)
+        if then is not None:
+            then()
+        os.remove(marker)
+        return True
+
+    def _publish_staged(self, staged: list[str], then=None) -> None:
+        """Publish stagings whose subs are JOINED on the read path
+        (span's spans x rescored, simhash's banks/fps/pairs) as one
+        unit: a `_compact_ready` marker commits the consistent staged
+        set first, so a crash mid-publish (or before `then`, a follow-up
+        step that must run exactly after the publish) is finished
+        verbatim by _recover_publish instead of being restaged from a
+        half-swapped state. Without the marker, stale stagings are
+        garbage that stage_compact clears before restaging."""
+        import os
+
+        marker = f"{self.root}/_compact_ready"
+        if staged:
+            with open(marker, "w") as fh:
+                fh.write("ready\n")
+        for sub in staged:
+            finish_compact(self.root, sub)
+        if then is not None:
+            then()
+        if staged:
+            os.remove(marker)
+
+
+class Forgettable:
+    """Mixin for the Forgetting* variants (list it first among the
+    bases): right-to-be-forgotten over an EpochIndex. `forget` writes a
+    tombstone epoch; reads hide the forgotten ids' rows, ingest rejects
+    them, and compact() physically erases them (EpochIndex docstring)."""
+
+    RETIRES_IDS = True
+
+    def forget(self, ids, epoch_id: int | None = None) -> None:
+        """Tombstone a frame of ids. Epoch-scoped overwrite — replaying
+        a forget rewrites identical tombstones."""
+        from pyspark.sql import functions as F
+
+        if epoch_id is None:
+            epoch_id = next_epoch(self.root, "forgets")
+        self._write(ids.select(F.col(self._id_col).cast("long")
+                               .alias(self.tombstone_col))
+                    .distinct().coalesce(1), "forgets", epoch_id)

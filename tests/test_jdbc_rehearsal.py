@@ -441,3 +441,53 @@ def test_pg_dialect_on_duckdb_second_parser(spark):
         got = sorted(r[:4] for r in c.execute(
             'SELECT * FROM "s"."sync_data_status"').fetchall())
     assert got == [(1, "OK", "", 1), (2, "ERR", "boom", 0)]
+
+
+@pytest.mark.xfail(strict=True, reason=(
+    "known defect: blocking is per batch and JdbcTable deletes are "
+    "physical, so a retried insert that failed before a later successful "
+    "delete of the same key lands afterwards and resurrects the key; the "
+    "fix is a cross-batch blocked-key map"))
+def test_retried_insert_cannot_resurrect_key_deleted_in_later_batch(spark):
+    """Batch 1: the insert of k=1 fails (ERR). Batch 2: the delete of
+    k=1 succeeds — nothing blocks it, since batch 1's failure is not
+    visible to batch 2. The retry tick then lands the insert into the
+    now-empty key. Strict per-key order says the delete is the key's
+    newest change, so k=1 must stay absent."""
+    from dbsync_spark.schemas import SYNC_DATA_SCHEMA
+    from dbsync_spark.sinks.jdbc import sqlite_connect_factory
+
+    workdir = tempfile.mkdtemp(prefix="dbsync_jdbc_resurrect_")
+    db = f"{workdir}/t.db"
+    with sqlite3.connect(db) as c:
+        c.execute('CREATE TABLE "t" (k INTEGER PRIMARY KEY, v TEXT, '
+                  '"_last_id" INTEGER)')
+    log_path = f"{workdir}/log"
+    changes = [(1, "I", '{"k": 1, "v": "a"}'), (2, "D", '{"k": 1}')]
+    for change_id, op, data in changes:
+        spark.createDataFrame(
+            [(change_id, "db1", "t1", "public", "t", op, data, None)],
+            SYNC_DATA_SCHEMA).coalesce(1).write.mode("append").parquet(
+            log_path)
+    payload = T.StructType([T.StructField("k", T.LongType()),
+                            T.StructField("v", T.StringType())])
+    target = JdbcTable("postgresql", "", "main", "t", ["k"],
+                       connect=sqlite_connect_factory(db), n_writers=1)
+    pipe = SyncPipeline(
+        spark, SyncRule("db1", "public", "t", ("k",)), payload,
+        log_path=log_path, target_path=f"{workdir}/unused",
+        status_path=f"{workdir}/status", checkpoint_path=f"{workdir}/ckpt",
+        target_layout=target, in_batch_retries=1,
+        failure_policy=lambda ch: F.when(
+            (F.col("k") == 1) & (F.col("operation") == "I"), 1).otherwise(0))
+    log = spark.read.schema(SYNC_DATA_SCHEMA).parquet(log_path)
+    for batch_id, (change_id, _, _) in enumerate(changes):
+        pipe.process_batch(log.where(F.col("id") == change_id), batch_id)
+    ticks = 0
+    while pipe.retry_pass():
+        ticks += 1
+        assert ticks <= 3, "retry loop failed to converge"
+
+    with sqlite3.connect(db) as c:
+        rows = c.execute("SELECT k FROM t").fetchall()
+    assert rows == [], f"deleted key resurrected by the retried insert: {rows}"
